@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from flink_mm_spark.operators.dedup import block_pair_cosine, tokens_expr
 from flink_mm_spark.registry import register
+from flink_mm_spark.session import hold
 from flink_mm_spark.sources.tables import parallelize_scan, table
 
 # SemDeDup seed centroids: the k lowest vec_ids (deterministic, no RNG).
@@ -224,8 +225,6 @@ def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BLP_CACHE: list[DataFrame] = []  # persisted bigram-count table (module cache)
-
 
 @register(
     "bigram_logprob",
@@ -272,8 +271,8 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum (CLAUDE.md float rule) so partition order cannot move the hash.
 
     Plan: one pair-key map-side-combined shuffle builds c(x,y) (persisted
-    — it feeds its own marginal AND the scoring join, the PMI module-cache
-    pattern); c(x,·) and |V| are vocabulary-sized broadcasts; the scoring
+    until the next call — it feeds its own marginal AND the scoring
+    join, the PMI pattern); c(x,·) and |V| are vocabulary-sized broadcasts; the scoring
     join back onto the document bigram stream is gram-keyed (AQE
     broadcasts while the LM is small, sort-merge beyond — the same
     regime switch as ``unigram_logprob``'s vocab join).
@@ -293,10 +292,9 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "p.x", "p.y")
     )
-    while _BLP_CACHE:
-        _BLP_CACHE.pop().unpersist()
+    hold(spark, "bigram_logprob")
     c = b.groupBy("x", "y").agg(F.count(F.lit(1)).alias("c_xy")).persist()
-    _BLP_CACHE.append(c)
+    hold(spark, "bigram_logprob", c)
     cx = c.groupBy("x").agg(F.sum("c_xy").cast("bigint").alias("c_x"))
     vv = (
         toks.select(F.explode("t").alias("tok"))
@@ -551,7 +549,6 @@ def dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 SUBSTR_DEDUP_K = 10  # minimum duplicated-span width in tokens
-_SUBSTR_CACHE: list = []  # persisted tokenized table (module-cache pattern)
 
 
 @register(
@@ -673,15 +670,14 @@ def substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     2^128 — would resolve identically in both engines). The island count
     and kept-token filter are in-array lambdas over the per-doc position
     list — no window over corpus rows. The tokenized table feeds both
-    the gram pipeline and the final rejoin, so it is persisted for the
-    run (module-cache pattern) instead of re-tokenizing the corpus.
+    the gram pipeline and the final rejoin, so it is persisted until the
+    next call instead of re-tokenizing the corpus.
     """
     K = SUBSTR_DEDUP_K
     d = parallelize_scan(table(spark, sf_dir, "documents").select("doc_id", "text"))
-    while _SUBSTR_CACHE:
-        _SUBSTR_CACHE.pop().unpersist()
+    hold(spark, "substring_dedup")
     t = d.select("doc_id", tokens_expr().alias("a")).persist()
-    _SUBSTR_CACHE.append(t)
+    hold(spark, "substring_dedup", t)
     n = F.size("a")
     spans = F.when(
         n >= K,
@@ -1012,8 +1008,6 @@ def _novelty_oracle() -> str:
     """
 
 
-_NOV_CACHE: list = []  # persisted (doc_id, gram-hash) table
-
 
 @register("ngram_novelty", oracle=_novelty_oracle())
 def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1037,12 +1031,11 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     one gram-keyed rejoin; never doc×doc. The hot-gram skew (a boilerplate
     gram appearing in n/7 docs) is absorbed by partial aggregation exactly
     as in `substring_dedup`'s audited shape. The gram table feeds the
-    frequency aggregate AND the rejoin, so it persists via the module
-    cache."""
+    frequency aggregate AND the rejoin, so it persists until the next
+    call."""
     from flink_mm_spark.operators.dedup import shingles_from_tokens, tokens_expr
 
-    while _NOV_CACHE:
-        _NOV_CACHE.pop().unpersist()
+    hold(spark, "ngram_novelty")
     d = parallelize_scan(table(spark, sf_dir, "documents"))
     g = (
         d.select("doc_id", tokens_expr().alias("_toks"))
@@ -1054,7 +1047,7 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .persist()
     )
-    _NOV_CACHE.append(g)
+    hold(spark, "ngram_novelty", g)
     dfreq = g.groupBy("g").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     return (
         g.join(dfreq, "g")

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_mm_spark.registry import register
+from flink_mm_spark.session import hold
 from flink_mm_spark.sources.tables import parallelize_scan, table
 
 # Rows per packed block in the embedding_near_dup block-pair GEMM: bounds a
@@ -438,9 +439,6 @@ _MH_B = _rng.randint(0, MINHASH_MOD, size=N_PERM).astype(np.int64)
 
 _EMPTY_SIG = [int(MINHASH_MOD)] * N_PERM  # signature of a shingle-less doc
 
-_SIG_CACHE: list[DataFrame] = []  # last persisted signatures (bounds cache leak)
-_BPC_CACHE: list[DataFrame] = []  # last persisted block-pack (block_pair_cosine)
-
 
 def _slot_match_udf():
     """Vectorized signature slot-match scoring: one numpy matrix compare per
@@ -602,10 +600,9 @@ def _banded_pairs(
     - Scoring: the shared vectorized numpy slot-match kernel, one Arrow
       stage (never an interpreted per-pair zip_with fold).
     """
-    while _SIG_CACHE:
-        _SIG_CACHE.pop().unpersist()
+    hold(sigs.sparkSession, "banded_pairs")
     sigs = sigs.persist()
-    _SIG_CACHE.append(sigs)
+    hold(sigs.sparkSession, "banded_pairs", sigs)
     bands = sigs.select(
         "doc_id",
         "source",
@@ -920,17 +917,14 @@ def _keep_best_oracle() -> str:
     """
 
 
-_KB_CACHE: list = []  # persisted quality/pair tables (unpersisted next call)
-
 
 def _kb_tables(spark: SparkSession, sf_dir: str):
     """(q, pq, losers): the persisted (n_tok, micro-quality) table, the
     flag-attached candidate pairs, and the distinct loser ids of the
     keep-best decision — shared by ``dedup_keep_best`` and the keep-best
-    funnel variant (``corpus_prep_pipeline_keepbest``). Owns the
-    ``_KB_CACHE`` swap (q and pq each feed 2+ downstream consumers)."""
-    while _KB_CACHE:
-        _KB_CACHE.pop().unpersist()
+    funnel variant (``corpus_prep_pipeline_keepbest``). Owns their
+    ``hold`` slot (q and pq each feed 2+ downstream consumers)."""
+    hold(spark, "keep_best")
     docs = parallelize_scan(table(spark, sf_dir, "documents"))
     n_tok, q_score = kb_quality_cols()
     q = docs.select(
@@ -938,7 +932,6 @@ def _kb_tables(spark: SparkSession, sf_dir: str):
         n_tok.alias("n_tok"),
         q_score.alias("q_score"),
     ).persist()
-    _KB_CACHE.append(q)
     pq = (
         _mhx_pairs(spark, sf_dir, sort=False)
         .select("doc_a", "doc_b")
@@ -960,7 +953,7 @@ def _kb_tables(spark: SparkSession, sf_dir: str):
         )
         .persist()
     )
-    _KB_CACHE.append(pq)
+    hold(spark, "keep_best", q, pq)
     losers = pq.select(_kb_loser_expr().alias("doc_id")).distinct()
     return q, pq, losers
 
@@ -1032,7 +1025,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the pair list, degrees one map-side-combined count, and the final
     assembly two doc_id left joins; no component iteration, no driver
     state. The pair list and quality table are each consumed by 2+
-    downstream joins, so both persist via the module cache (re-execution
+    downstream joins, so both persist until the next call (re-execution
     of the banded self-join per consumer is the repo's documented
     re-compute hazard)."""
     q, pq, losers = _kb_tables(spark, sf_dir)
@@ -1419,14 +1412,12 @@ def block_pair_cosine(
     # scan→assign→window→pack subtree executes three times (r5, found
     # profiling semantic_dedup at 300k synthetic vectors). The packed form
     # is the corpus at ~1× size (ids + normalized doubles), safely
-    # cacheable; previous invocation's cache is released on next call, the
-    # _SIG_CACHE pattern.
-    while _BPC_CACHE:
-        _BPC_CACHE.pop().unpersist()
+    # cacheable; previous invocation's cache is released on next call.
+    hold(e.sparkSession, "block_pair_cosine")
     packed = blocked.groupBy(*knames, "blk").applyInPandas(
         pack, f"{kddl}blk int, ids array<long>, mat array<double>"
     ).persist()
-    _BPC_CACHE.append(packed)
+    hold(e.sparkSession, "block_pair_cosine", packed)
 
     # upper-triangular block-pair keys from the key columns alone (tiny), then
     # attach each side's payload by equi-join — the heavy arrays only ever
@@ -1488,7 +1479,6 @@ def block_pair_cosine(
 # higher thresholds) sit far up the recall curve.
 EMB_LSH_BANDS = 16
 EMB_LSH_PLANES = 6
-_EMB_LSH_CACHE: list[DataFrame] = []
 
 
 @register("embedding_near_dup_lsh", oracle=None)  # approximate → rows-only
@@ -1518,15 +1508,14 @@ def embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         return pd.Series(list(keyed))
 
     e = embeddings64(spark, sf_dir)
-    while _EMB_LSH_CACHE:
-        _EMB_LSH_CACHE.pop().unpersist()
+    hold(spark, "embedding_near_dup_lsh")
     # Candidate generation runs on (vec_id, bucket) ONLY — 16-byte shuffle
     # rows. Carrying the embedding arrays through the bucket join and the
     # pair dedup would multiply every shuffle by ~64× (1 KB/row); instead
     # the deduped id pairs re-attach vectors with two equi-joins on vec_id
     # (auto-broadcast locally; plain shuffle hash joins at corpus scale).
     banded = e.select("vec_id", F.explode(band_keys("emb")).alias("bucket")).persist()
-    _EMB_LSH_CACHE.append(banded)
+    hold(spark, "embedding_near_dup_lsh", banded)
 
     a = banded.select(F.col("vec_id").alias("vec_a"), "bucket")
     b = banded.select(F.col("vec_id").alias("vec_b"), "bucket")
@@ -1563,8 +1552,6 @@ def embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.orderBy(F.col("cos_sim").desc(), "vec_a", "vec_b")
 
 
-_JPF_CACHE: list[DataFrame] = []
-
 
 @register("jaccard_prefix_filtered", oracle=_JACCARD_ORACLE)
 def jaccard_prefix_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1595,10 +1582,9 @@ def jaccard_prefix_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = parallelize_scan(table(spark, sf_dir, "documents"))
     # the token pipeline feeds freq, posting AND both verify sides: persist
     # once (previous invocation's cache released, same pattern as minhash)
-    while _JPF_CACHE:
-        _JPF_CACHE.pop().unpersist()
+    hold(spark, "jaccard_prefix_filtered")
     sets = d.select("doc_id", "source", F.array_distinct(tokens_expr()).alias("sh")).persist()
-    _JPF_CACHE.append(sets)
+    hold(spark, "jaccard_prefix_filtered", sets)
 
     # global document frequency per token → rarity rank (ties by token)
     freq = (
@@ -1719,8 +1705,6 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-_CC_CACHE: list[DataFrame] = []  # last persisted labels (all component entries)
-
 
 def connected_components(edges: DataFrame, docs: DataFrame, max_rounds: int = 50):
     """(doc_id, label = component min) via alternating large-star/small-star
@@ -1744,11 +1728,11 @@ def connected_components(edges: DataFrame, docs: DataFrame, max_rounds: int = 50
     """
     from flink_mm_spark.algos.damds import free_local_checkpoint
 
-    # module-cache swap (ADVICE r8 #1): the labels table below is persisted
+    # held labels (ADVICE r8 #1): the labels table below is checkpointed
     # because every caller consumes it at least twice (label join + size
-    # aggregate); without the swap each invocation leaked one persisted
+    # aggregate); without the ``hold`` each invocation leaked one
     # DataFrame into the block manager for the life of the session. The
-    # swap lives HERE rather than per-caller so all four component entry
+    # slot lives HERE rather than per-caller so all four component entry
     # points (dedup_components[_exact], both corpus_prep funnels) share it.
     #
     # CONTRACT (ADVICE r9 #2, closed in code r11): a returned labels frame
@@ -1756,10 +1740,9 @@ def connected_components(edges: DataFrame, docs: DataFrame, max_rounds: int = 50
     # checkpoint is freed, so its blocks never depend on freed lineage and
     # a cached-partition loss cannot surface as a block-not-found crash.
     # It remains consumable only until the NEXT components invocation
-    # (this swap frees the previous generation's blocks), which every
+    # (this call frees the previous generation's blocks), which every
     # caller in the repo honors (one entry runs to completion per grade).
-    while _CC_CACHE:
-        free_local_checkpoint(_CC_CACHE.pop())
+    hold(docs.sparkSession, "connected_components")
 
     # each round references the previous edge set several times (sym view,
     # both stars, the fixpoint anti-join): without per-round lineage
@@ -1818,7 +1801,7 @@ def connected_components(edges: DataFrame, docs: DataFrame, max_rounds: int = 50
     # checkpoint they derive from (VERDICT r10 #6): a persist() here would
     # root the cached partitions' recompute path in e's soon-freed blocks
     labels = labels.localCheckpoint(eager=True)
-    _CC_CACHE.append(labels)
+    hold(docs.sparkSession, "connected_components", labels)
     free_local_checkpoint(e)
     return labels, rounds
 

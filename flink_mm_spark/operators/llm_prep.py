@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from flink_mm_spark.operators.dedup import norm_text, shingles_from_tokens, tokens_expr
 from flink_mm_spark.operators.text import STOPWORDS, _sql_list
 from flink_mm_spark.registry import register
+from flink_mm_spark.session import hold, staged
 from flink_mm_spark.sources.tables import parallelize_scan, table
 
 # Redaction patterns — plain character classes + bounded repetition only,
@@ -668,7 +669,6 @@ def weighted_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Sequence packing: fixed token budget per training sequence (the
 # concatenate-then-chunk step of GPT-style pretraining ingestion).
 SEQ_TOKEN_BUDGET = 512
-_PACK_CACHE: list[DataFrame] = []
 
 
 @register(
@@ -747,8 +747,7 @@ def pack_by_counts(
         ).alias("shuffle_key"),
     )
     n_parts = spark.sparkContext.defaultParallelism
-    while _PACK_CACHE:
-        _PACK_CACHE.pop().unpersist()
+    hold(spark, "pack_by_counts")
     # INVARIANT (ADVICE r2): the offset map collected below is keyed by the
     # partition ids of THIS persisted layout. If cached partitions are
     # evicted between the totals collect() and the mapInPandas pass, the
@@ -763,7 +762,7 @@ def pack_by_counts(
         .select(F.spark_partition_id().alias("pid"), *key_cols, "n_tok")
         .persist()
     )
-    _PACK_CACHE.append(parts)
+    hold(spark, "pack_by_counts", parts)
 
     totals = {
         r["pid"]: r["tot"]
@@ -1043,8 +1042,6 @@ def shard_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _shard_rollup(back)
 
 
-_SAS_SRC_CACHE: dict[str, str] = {}  # sf_dir -> staged packed-slice stream dir
-
 
 def idempotent_shard_append(df: DataFrame, batch_id: int, dst: str) -> None:
     """EXACTLY-ONCE micro-batch shard append (VERDICT r10 #1).
@@ -1141,16 +1138,18 @@ def shard_append_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     mm/MatrixMultiply.java:88-103 (write-then-compare oracle pattern)."""
     from flink_mm_spark.session import scratch_dir
 
-    src = _SAS_SRC_CACHE.get(sf_dir)
-    if src is None:
-        # stage the packed slice stream as 4 arrival files, cached per
-        # (process, sf_dir): the rollup is order- and split-independent,
-        # so reuse changes cost, not semantics (the _arrival_split rule)
-        src = scratch_dir("sas_src_")
-        _with_shard_id(_mixture_packed(spark, sf_dir)).repartition(4).write.mode(
-            "overwrite"
-        ).parquet(src)
-        _SAS_SRC_CACHE[sf_dir] = src
+    # stage the packed slice stream as 4 arrival files once per sf_dir:
+    # the rollup is order- and split-independent, so reuse changes cost,
+    # not semantics (the _arrival_split rule)
+    src = staged(
+        spark,
+        sf_dir,
+        "sas_src_",
+        lambda path: _with_shard_id(_mixture_packed(spark, sf_dir))
+        .repartition(4)
+        .write.mode("overwrite")
+        .parquet(path),
+    )
     slice_schema = spark.read.parquet(src).schema
     dst = scratch_dir("sas_dst_")  # fresh per invocation: appends accumulate
     stream = (
@@ -1204,8 +1203,6 @@ def _xso_oracle() -> str:
     """
 
 
-_XSO_CACHE: list = []  # persisted (source, gram-hash) table
-
 
 @register("cross_source_overlap", oracle=_xso_oracle())
 def cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1225,10 +1222,9 @@ def cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is one map-side-combined aggregate, and the gram equi-self-join
     emits at most |sources|² rows per gram (sources ≪ corpus; 20 here).
     Per-source totals re-attach by broadcast (|sources| rows). The gram
-    table feeds the totals aggregate AND the self-join, so it persists via
-    the module cache."""
-    while _XSO_CACHE:
-        _XSO_CACHE.pop().unpersist()
+    table feeds the totals aggregate AND the self-join, so it persists
+    until the next call."""
+    hold(spark, "cross_source_overlap")
     d = parallelize_scan(table(spark, sf_dir, "documents"))
     g = (
         d.select("source", tokens_expr().alias("_toks"))
@@ -1240,7 +1236,7 @@ def cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .persist()
     )
-    _XSO_CACHE.append(g)
+    hold(spark, "cross_source_overlap", g)
     tot = g.groupBy("source").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     a, b = g.alias("a"), g.alias("b")
     sh = (

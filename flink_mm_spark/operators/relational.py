@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_mm_spark.registry import register
+from flink_mm_spark.session import hold
 from flink_mm_spark.sources.tables import table
 
 
@@ -1331,9 +1332,6 @@ def user_funnel_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id")
 
 
-# gapfill's persisted rollup (see builder note on release timing)
-_GAPFILL_CACHE: list = []
-
 
 @register(
     "events_minutely_gapfill",
@@ -1373,8 +1371,7 @@ def events_minutely_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
     # previous invocation's cache released here (the returned plan must
     # stay executable, so the builder can't unpersist its own cache)
-    while _GAPFILL_CACHE:
-        _GAPFILL_CACHE.pop().unpersist()
+    hold(spark, "events_minutely_gapfill")
     m = (
         e.groupBy(F.date_trunc("minute", "ts").alias("minute"))
         .agg(
@@ -1383,7 +1380,7 @@ def events_minutely_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
-    _GAPFILL_CACHE.append(m)
+    hold(spark, "events_minutely_gapfill", m)
     grid = (
         m.agg(F.min("minute").alias("lo"), F.max("minute").alias("hi"))
         .select(

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_mm_spark.registry import register
+from flink_mm_spark.session import drain_to_memory, hold, staged
 from flink_mm_spark.sources.tables import table
 
 EMB_DIM = 64
@@ -582,9 +583,6 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PQS_NQ = 4  # streamed query vectors (vec_id 0..3), one arrival file each
 
-_PQS_SPLIT_CACHE: dict[str, str] = {}  # sf_dir -> staged query-arrival dir
-_PQS_CODES_CACHE: list[DataFrame] = []  # last persisted corpus code table
-
 
 def _pq_encode_block(cb: np.ndarray, pdf: pd.DataFrame) -> np.ndarray:
     """(n, PQ_S) int64 code matrix for one Arrow batch of (vec_id, emb)
@@ -605,7 +603,7 @@ def _pqs_query_split(spark: SparkSession, sf_dir: str) -> str:
     strictly increasing mtimes, so the file source delivers them one per
     micro-batch in qid order — the same content-determined arrival
     staging as ``deterministic_arrival_split`` (streaming/documents.py).
-    Cached per (process, sf_dir); the result is arrival-order independent
+    Staged once per sf_dir; the result is arrival-order independent
     (each query's top-k depends only on the static index), so reuse
     changes cost, not semantics."""
     import glob
@@ -614,9 +612,7 @@ def _pqs_query_split(spark: SparkSession, sf_dir: str) -> str:
 
     from flink_mm_spark.session import scratch_dir
 
-    src = _PQS_SPLIT_CACHE.get(sf_dir)
-    if src is None:
-        src = scratch_dir("pqs_q_")
+    def write(src: str) -> None:
         e = embeddings64(spark, sf_dir)
         t0 = int(os.path.getmtime(src)) - 3600
         # ONE pass for all PQS_NQ query files (VERDICT r12 nit): a
@@ -639,8 +635,8 @@ def _pqs_query_split(spark: SparkSession, sf_dir: str) -> str:
             shutil.move(parts[0], dst)
             os.utime(dst, (t0 + 10 * k, t0 + 10 * k))
         shutil.rmtree(tmp, ignore_errors=True)
-        _PQS_SPLIT_CACHE[sf_dir] = src
-    return src
+
+    return staged(spark, sf_dir, "pqs_q_", write)
 
 
 def _pqs_oracle() -> str:
@@ -738,16 +734,14 @@ def pq_topk_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     # the static index: encode once, persist for every micro-batch's scan
-    # (module-cache swap bounds the leak, the _SIG_CACHE pattern)
-    while _PQS_CODES_CACHE:
-        _PQS_CODES_CACHE.pop().unpersist()
+    hold(spark, "pq_topk_streamed")
     codes = (
         e.select("vec_id", "emb")
         .mapInPandas(encode, "vec_id long, codes array<long>")
         .persist()
     )
     codes.count()
-    _PQS_CODES_CACHE.append(codes)
+    hold(spark, "pq_topk_streamed", codes)
 
     spool = scratch_dir("pqs_out_")
 
@@ -823,8 +817,6 @@ def pq_topk_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PQE_SPLIT_CACHE: dict[str, str] = {}  # sf_dir -> 4-file embedding-arrival dir
-
 
 def _pqe_oracle() -> str:
     # the batch encoder's codes CTE rendered per vector — the same
@@ -884,13 +876,17 @@ def pq_encode_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = embeddings64(spark, sf_dir)
     cb = _pq_codebook(e)
-    src = _PQE_SPLIT_CACHE.get(sf_dir)
-    if src is None:
-        # stage the corpus as 4 arrival files (order-independent output,
-        # so a plain repartition split suffices — the _arrival_split rule)
-        src = scratch_dir("pqe_src_")
-        e.select("vec_id", "emb").repartition(4).write.mode("overwrite").parquet(src)
-        _PQE_SPLIT_CACHE[sf_dir] = src
+    # stage the corpus as 4 arrival files (order-independent output,
+    # so a plain repartition split suffices — the _arrival_split rule)
+    src = staged(
+        spark,
+        sf_dir,
+        "pqe_src_",
+        lambda path: e.select("vec_id", "emb")
+        .repartition(4)
+        .write.mode("overwrite")
+        .parquet(path),
+    )
 
     def encode(batches):
         for pdf in batches:
@@ -949,10 +945,6 @@ ONL_STATE_PARTS = 8
 # batch), the band store's capped-tier precedent. 24 < the ~31-member
 # average cell at sf0.01, so the cap provably binds on testdata too.
 ONL_CELL_CAP = 24
-
-_ONL_SPLIT_CACHE: dict[str, str] = {}  # sf_dir -> staged 6-file arrival dir
-_ONL_SINK_CACHE: list[str] = []  # previous invocation's memory-sink table
-_ONL_CKPT_CACHE: dict[str, str] = {}  # sf_dir -> completed UNCAPPED run's checkpoint
 
 
 def _onl_oracle() -> str:
@@ -1131,20 +1123,18 @@ def _onl_arrival_split(spark: SparkSession, sf_dir: str) -> str:
     batch-1 members). The CAPPED tier stages its own 6-file split
     (``_onl_arrival_split_sequential``) — its admission prefix depends on
     per-batch arrival order by contract."""
-    from flink_mm_spark.session import scratch_dir
-
-    src = _ONL_SPLIT_CACHE.get(sf_dir)
-    if src is None:
-        src = scratch_dir("onl_src_")
-        waves = _onl_wave_dfs(embeddings64(spark, sf_dir))
-        _write_wave_files_onepass(
-            spark, _merge_waves(waves, [[0, 1, 2], [3, 4, 5]]), src
-        )
-        _ONL_SPLIT_CACHE[sf_dir] = src
-    return src
-
-
-_ONL_SEQ_SPLIT_CACHE: dict[str, str] = {}  # sf_dir -> 6-file sequential dir
+    return staged(
+        spark,
+        sf_dir,
+        "onl_src_",
+        lambda src: _write_wave_files_onepass(
+            spark,
+            _merge_waves(
+                _onl_wave_dfs(embeddings64(spark, sf_dir)), [[0, 1, 2], [3, 4, 5]]
+            ),
+            src,
+        ),
+    )
 
 
 def _onl_arrival_split_sequential(spark: SparkSession, sf_dir: str) -> str:
@@ -1152,14 +1142,14 @@ def _onl_arrival_split_sequential(spark: SparkSession, sf_dir: str) -> str:
     per-cell admission prefix is defined over this exact batch sequence
     (first cap members by (vec_id % ONL_CBATCHES, vec_id) per cell —
     pinned by the replay test)."""
-    from flink_mm_spark.session import scratch_dir
-
-    src = _ONL_SEQ_SPLIT_CACHE.get(sf_dir)
-    if src is None:
-        src = scratch_dir("onls_src_")
-        _write_wave_files_onepass(spark, _onl_wave_dfs(embeddings64(spark, sf_dir)), src)
-        _ONL_SEQ_SPLIT_CACHE[sf_dir] = src
-    return src
+    return staged(
+        spark,
+        sf_dir,
+        "onls_src_",
+        lambda src: _write_wave_files_onepass(
+            spark, _onl_wave_dfs(embeddings64(spark, sf_dir)), src
+        ),
+    )
 
 
 def onl_candidate_stream(
@@ -1374,8 +1364,17 @@ def ivf_pq_topk_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches deterministic, and (r14) lets the staged waves ride in TWO
     micro-batches (see `_onl_arrival_split`) with the declared arrival
     semantics, the oracle, and the output hash all unchanged."""
-    _, name = _onl_run(spark, sf_dir)
-    return _onl_rank(spark, name)
+    # the session's first run checkpoints into the dir the compaction
+    # entry drains (a completed uncapped run's state IS the index the
+    # codes-CTE oracle describes); later runs use fresh checkpoints
+    first = []
+    staged(
+        spark,
+        sf_dir,
+        "onl_ckpt_",
+        lambda ckpt: first.append(_onl_run(spark, sf_dir, ckpt=ckpt)[1]),
+    )
+    return _onl_rank(first[0] if first else _onl_run(spark, sf_dir)[1])
 
 
 def _onl_run(
@@ -1383,60 +1382,37 @@ def _onl_run(
     sf_dir: str,
     cell_cap: int | None = None,
     src: str | None = None,
-) -> tuple[str, str]:
+    ckpt: str | None = None,
+) -> tuple[str, DataFrame]:
     """Run the online IVF-PQ arrival stream to completion over the staged
-    waves; returns (checkpoint dir, memory-sink table name). ONE runner
+    waves; returns (checkpoint dir, drained candidate table). ONE runner
     behind the exact entry, the capped tier, the delete tier (which
-    passes its own staged ``src``), and (via the checkpoint cache) the
-    compaction entry. The stream starts under ``ONL_STATE_PARTS`` shuffle
-    partitions — the state-partition count is pinned into the checkpoint
-    at creation, so it is a per-stream knob, not session state (conf
-    restored after the run)."""
-    import uuid
-
+    passes its own staged ``src``), and the compaction entry. The stream
+    starts under ``ONL_STATE_PARTS`` shuffle partitions — the
+    state-partition count is pinned into the checkpoint at creation, so
+    it is a per-stream knob, not session state (conf restored after the
+    run)."""
     from flink_mm_spark.session import scratch_dir
 
     e = embeddings64(spark, sf_dir)
     cb = _pq_codebook(e)
-    # only the canonical (uncapped, default-arrival) run feeds the
-    # compaction entry's checkpoint cache — it must drain THE index the
-    # codes-CTE oracle describes
-    cache_ok = cell_cap is None and src is None
     if src is None:
         src = _onl_arrival_split(spark, sf_dir)
     candidates = onl_candidate_stream(spark, src, cb, cell_cap=cell_cap)
-
-    while _ONL_SINK_CACHE:
-        spark.catalog.dropTempView(_ONL_SINK_CACHE.pop())
-    name = f"ivf_pq_online_{uuid.uuid4().hex[:8]}"
-    _ONL_SINK_CACHE.append(name)
-    ckpt = scratch_dir("onl_ckpt_")
-    from flink_mm_spark.session import stream_state_parts
-
-    with stream_state_parts(spark, ONL_STATE_PARTS):
-        q = (
-            candidates.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if cache_ok:
-        # the compaction entry drains exactly this (uncapped) index
-        _ONL_CKPT_CACHE[sf_dir] = ckpt
-    return ckpt, name
+    ckpt = ckpt or scratch_dir("onl_ckpt_")
+    drained = drain_to_memory(
+        spark, candidates, "ivf_pq_online", "append", ONL_STATE_PARTS, ckpt
+    )
+    return ckpt, drained
 
 
-def _onl_rank(spark: SparkSession, name: str) -> DataFrame:
+def _onl_rank(drained: DataFrame) -> DataFrame:
     """Final per-query ranking over the drained candidate emissions."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("qid").orderBy("est_micro", "vec_id")
     return (
-        spark.table(name)
-        .withColumn("rnk", F.row_number().over(w).cast("int"))
+        drained.withColumn("rnk", F.row_number().over(w).cast("int"))
         .filter(F.col("rnk") <= PQ_TOPK)
         .orderBy("qid", "rnk")
     )
@@ -1468,13 +1444,13 @@ def ivf_pq_topk_streamed_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the capped tier keeps the one-wave-per-file split: its admission
     # prefix is defined over this exact batch sequence (r14 note in
     # _onl_arrival_split)
-    _, name = _onl_run(
+    _, drained = _onl_run(
         spark,
         sf_dir,
         cell_cap=ONL_CELL_CAP,
         src=_onl_arrival_split_sequential(spark, sf_dir),
     )
-    return _onl_rank(spark, name)
+    return _onl_rank(drained)
 
 
 # Delete tier (r13): the delete wave removes ids ≡ ONL_DEL_RES
@@ -1483,8 +1459,6 @@ def ivf_pq_topk_streamed_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a no-op, so the rule stays total either way).
 ONL_DEL_MOD = 16
 ONL_DEL_RES = 5
-
-_ONL_DEL_SPLIT_CACHE: dict[str, str] = {}  # sf_dir -> staged 7-file arrival dir
 
 
 def _onl_del_wave_dfs(e: DataFrame) -> list[DataFrame]:
@@ -1508,17 +1482,19 @@ def _onl_del_arrival_split(spark: SparkSession, sf_dir: str) -> str:
     the delete still lands before corpus 2/3 and wave B still sees the
     post-delete full index — the oracle's candidate predicate is
     unchanged, 2 micro-batches instead of 7."""
-    from flink_mm_spark.session import scratch_dir
-
-    src = _ONL_DEL_SPLIT_CACHE.get(sf_dir)
-    if src is None:
-        src = scratch_dir("onld_src_")
-        waves = _onl_del_wave_dfs(embeddings64(spark, sf_dir))
-        _write_wave_files_onepass(
-            spark, _merge_waves(waves, [[0, 1, 2], [3, 4, 5, 6]]), src
-        )
-        _ONL_DEL_SPLIT_CACHE[sf_dir] = src
-    return src
+    return staged(
+        spark,
+        sf_dir,
+        "onld_src_",
+        lambda src: _write_wave_files_onepass(
+            spark,
+            _merge_waves(
+                _onl_del_wave_dfs(embeddings64(spark, sf_dir)),
+                [[0, 1, 2], [3, 4, 5, 6]],
+            ),
+            src,
+        ),
+    )
 
 
 def _onl_del_oracle() -> str:
@@ -1610,10 +1586,10 @@ def ivf_pq_topk_streamed_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     row and an O(cell) in-place filter; state only shrinks. Compaction
     after deletes drains the post-delete index (pinned), which is how an
     erasure becomes durable at rest without rewriting history."""
-    _, name = _onl_run(
+    _, drained = _onl_run(
         spark, sf_dir, src=_onl_del_arrival_split(spark, sf_dir)
     )
-    return _onl_rank(spark, name)
+    return _onl_rank(drained)
 
 
 def compact_index_from_state(spark: SparkSession, ckpt: str) -> DataFrame:
@@ -1653,7 +1629,7 @@ def ivf_pq_index_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     table and `pq_encode_streamed`'s read-back (one artifact, two paths).
 
     Reuses the checkpoint of the `ivf_pq_topk_streamed` run when one
-    completed this process (the compaction cost is then JUST the drain:
+    completed in this session (the compaction cost is then JUST the drain:
     one state scan + one partitioned write); runs the online stream
     itself otherwise — self-sufficient either way.
 
@@ -1665,9 +1641,9 @@ def ivf_pq_index_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reader + exactly-once writer) is exactly what this entry grades."""
     from flink_mm_spark.session import scratch_dir
 
-    ckpt = _ONL_CKPT_CACHE.get(sf_dir)
-    if ckpt is None:
-        ckpt, _ = _onl_run(spark, sf_dir)
+    ckpt = staged(
+        spark, sf_dir, "onl_ckpt_", lambda path: _onl_run(spark, sf_dir, ckpt=path)
+    )
     dst = scratch_dir("onlc_dst_")
     compact_index_from_state(spark, ckpt).write.mode("overwrite").parquet(
         f"{dst}/ingest=compact-0"
@@ -1782,8 +1758,6 @@ def ann_lsh_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- embedding covariance / PCA (r10) ---------------------------------------
-
-_COV_CACHE: list[DataFrame] = []  # persisted double-cast embeddings
 
 # ONE oracle behind the batch exactness tier AND the streamed twin
 # (streaming/embeddings.py, r11): both accumulate the identical
@@ -1908,16 +1882,20 @@ def _cov_kernel_partials(batches):
 
 
 def _cov_kernel_safe(e: DataFrame) -> bool:
-    """The kernel's input contract: dense cells only (the JVM SUM skips
-    NULL cells; np.vstack cannot) and every possible pair product under
-    the repr-divergence bound. One tiny aggregate over the cached rows."""
+    """The kernel's input contract: dense rows and cells only (the JVM SUM
+    skips NULL cells; np.vstack cannot) and every possible pair product
+    under the repr-divergence bound. One tiny aggregate over the cached
+    rows. A whole-NULL ``emb`` row needs its own check: ``exists`` over a
+    NULL array is NULL, which ``max`` skips."""
     row = e.agg(
         F.max(F.expr("array_max(transform(emb, x -> abs(x)))")).alias("mx"),
         F.max(F.exists("emb", lambda x: x.isNull()).cast("int")).alias("nulls"),
+        F.max(F.col("emb").isNull().cast("int")).alias("null_rows"),
     ).collect()[0]
     return (
         row["mx"] is not None
         and row["nulls"] == 0
+        and row["null_rows"] == 0
         and row["mx"] * row["mx"] < _COV_KERNEL_MAX_ABS_PRODUCT
     )
 
@@ -2026,15 +2004,13 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduce): ~d× less arithmetic but float-order nondeterministic, hence
     rows-only — the classic exact/throughput twin split
     (minhash_lsh_exact / minhash_lsh_pairs)."""
-    while _COV_CACHE:
-        _COV_CACHE.pop().unpersist()
+    hold(spark, "embedding_covariance")
     e = (
         table(spark, sf_dir, "embeddings")
         .filter(F.col("embedding").isNotNull())
         .select(F.col("embedding").cast("array<double>").alias("emb"))
         .persist()  # feeds the product terms, the means, and the count
     )
-    _COV_CACHE.append(e)
     # UPPER-TRIANGLE terms, two interchangeable exact generators (r14,
     # VERDICT r13 #4): the guarded Arrow kernel sums every decimal term
     # as scaled int64/Python-int partials (one mapInPandas pass over the
@@ -2053,11 +2029,11 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # prods_ut feeds BOTH unionByName branches, and without the persist
     # the whole generate+aggregate subtree executed twice (ADVICE r13 #2
     # — the r13 plan showed no ReusedExchange, so the REALIZED term
-    # volume was still d(d+1); the module-cache rule for 2+-consumer
+    # volume was still d(d+1); the persist rule for 2+-consumer
     # DataFrames applies). With it the generator runs once and the
     # mirror reads 2080 cached rows.
     prods_ut = prods_ut.persist()
-    _COV_CACHE.append(prods_ut)
+    hold(spark, "embedding_covariance", e, prods_ut)
     prods = prods_ut.unionByName(
         prods_ut.filter("i < j").select(
             F.col("j").alias("i"), F.col("i").alias("j"), "sxy"

@@ -21,6 +21,7 @@ from flink_mm_spark.operators.dedup import (  # noqa: F401 — STOPWORDS/_sql_li
     tokens_expr,
 )
 from flink_mm_spark.registry import register
+from flink_mm_spark.session import hold
 from flink_mm_spark.sources.tables import parallelize_scan, table
 
 # "BPE-ish" token regex (WORD_REGEX, imported from dedup — the import leaf):
@@ -216,8 +217,6 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- trained character-n-gram language ID (r10) -----------------------------
 
-_LID_CACHE: list[DataFrame] = []  # persisted gram-count table (module cache)
-
 _LANG_ID_ORACLE = """
 WITH t AS (
   SELECT doc_id, lang, lower(trim(text)) AS s FROM documents
@@ -268,12 +267,11 @@ def lang_id_ngram_over(docs: DataFrame) -> DataFrame:
     g_tr = base.filter(F.col("doc_id") % 5 != 0).select(
         "lang", F.explode(grams).alias("g")
     )
-    while _LID_CACHE:
-        _LID_CACHE.pop().unpersist()
+    hold(docs.sparkSession, "lang_id")
     # the profile table feeds its own marginals AND the scoring join — the
-    # bigram_logprob module-cache persist rule
+    # bigram_logprob persist rule
     c = g_tr.groupBy("lang", "g").agg(F.count(F.lit(1)).alias("c")).persist()
-    _LID_CACHE.append(c)
+    hold(docs.sparkSession, "lang_id", c)
     tot = c.groupBy("lang").agg(F.sum("c").cast("bigint").alias("t"))
     vv = c.agg(F.countDistinct("g").cast("bigint").alias("v"))
     langs = c.select(F.col("lang").alias("cand")).distinct()
@@ -328,7 +326,7 @@ def lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: training is ONE (lang, gram)-keyed map-side-combined
     aggregate (profile table ≈ |V|×|langs|, vocabulary-sized — persisted
-    via the module cache because it feeds its marginals and the scoring
+    until the next call because it feeds its marginals and the scoring
     join); scoring joins the exploded held-out gram stream against the
     profiles under explicit ``F.broadcast`` hints — broadcast is FORCED,
     not threshold-gated (ADVICE r10 #1: trigram profiles are bounded by
@@ -558,7 +556,6 @@ def quality_logit_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 BM25_TERMS = ["scan", "join", "window"]  # fixed query, present at every SF
-_BM25_CACHE: list = []  # persisted tokenized frame (see builder note)
 BM25_K1 = 1.2
 BM25_B = 0.75
 BM25_TOPK = 20
@@ -627,10 +624,9 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     # previous invocation's cache released here (the returned plan must
     # stay executable, so the builder can't unpersist its own cache)
-    while _BM25_CACHE:
-        _BM25_CACHE.pop().unpersist()
+    hold(spark, "bm25_topk")
     toks = d.select("doc_id", tokens_expr().alias("toks")).persist()
-    _BM25_CACHE.append(toks)
+    hold(spark, "bm25_topk", toks)
     dl = toks.select("doc_id", F.size("toks").alias("dl"))
     g = dl.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
@@ -683,8 +679,6 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Collocation mining: bigram PMI
 # ---------------------------------------------------------------------------
-
-_PMI_CACHE: list[DataFrame] = []  # last persisted bigram-count table
 
 # Bigrams are enumerated over the first BG_MAX_TOKENS+1 whitespace tokens per
 # document, bounding the oracle's range() enumeration (the rolling_fingerprints
@@ -753,12 +747,10 @@ def token_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("c_xy")
     )
     # the pair table feeds four consumers (m, cx, cy, final join): persist it
-    # once or Spark re-runs the corpus explode+shuffle per consumer (the
-    # dedup _SIG_CACHE pattern — module cache bounds the leak to one table)
-    while _PMI_CACHE:
-        _PMI_CACHE.pop().unpersist()
+    # once or Spark re-runs the corpus explode+shuffle per consumer
+    hold(spark, "token_bigram_pmi")
     c = c.persist()
-    _PMI_CACHE.append(c)
+    hold(spark, "token_bigram_pmi", c)
     m = c.agg(F.sum("c_xy").cast("bigint").alias("m_total"))
     cx = c.groupBy("x").agg(F.sum("c_xy").cast("bigint").alias("c_x"))
     cy = c.groupBy("y").agg(F.sum("c_xy").cast("bigint").alias("c_y"))

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from flink_mm_spark.operators.dedup import WORD_REGEX, tokens_expr
 from flink_mm_spark.registry import register
+from flink_mm_spark.session import hold
 from flink_mm_spark.sources.tables import parallelize_scan, table
 
 N_MERGES = 6
@@ -534,7 +535,6 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # F.broadcast would OOM the driver building the broadcast relation
 # (VERDICT r7 What's-wrong #2: documented in r7, implemented here).
 ENCODE_BROADCAST_MAX_WORDS = 4_000_000
-_ENC_CACHE: list = []  # persisted encoded-vocab tables (unpersisted next call)
 
 
 def _encoded_words_join(dw: DataFrame, enc: DataFrame) -> DataFrame:
@@ -548,10 +548,9 @@ def _encoded_words_join(dw: DataFrame, enc: DataFrame) -> DataFrame:
     shapes for both tiers are pinned in
     tests/test_plans.py::test_encoded_words_join_broadcast_guard.
     """
-    while _ENC_CACHE:
-        _ENC_CACHE.pop().unpersist()
+    hold(enc.sparkSession, "encoded_words")
     enc = enc.persist()
-    _ENC_CACHE.append(enc)
+    hold(enc.sparkSession, "encoded_words", enc)
     if enc.count() <= ENCODE_BROADCAST_MAX_WORDS:
         return dw.join(F.broadcast(enc), "w")
     return dw.join(enc, "w")
@@ -797,7 +796,6 @@ def bpe_bytes_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 WP_N_MERGES = 6
 WP_CONT = "##"  # continuation prefix for non-word-initial symbols
-_WPE_CACHE: list = []  # wordpiece_encode's persisted word table (module cache)
 
 # One unrolled oracle stage per merge round. WordPiece differs from BPE in
 # exactly two places, both replayed here: (1) the symbol space carries the
@@ -1364,10 +1362,9 @@ def _wp_trained_vocab(docs: DataFrame):
     ``(bare, cont, max_len, words)``: the bare/continuation piece sets
     (alphabet + merged pieces — O(alphabet + merges), KBs, closure-safe),
     the longest piece length, and the persisted word-frequency table
-    (module-cached; the caller's returned DataFrame executes after the
-    calling function returns)."""
-    while _WPE_CACHE:
-        _WPE_CACHE.pop().unpersist()
+    (held until the next call; the caller's returned DataFrame executes
+    after the calling function returns)."""
+    hold(docs.sparkSession, "wordpiece_words")
     words = (
         docs.select(F.explode(F.regexp_extract_all("text", F.lit(WORD_REGEX), 0)).alias("w0"))
         .select(F.lower(F.trim(F.col("w0"))).alias("w"))
@@ -1375,7 +1372,7 @@ def _wp_trained_vocab(docs: DataFrame):
         .agg(F.count(F.lit(1)).alias("freq"))
         .persist()
     )
-    _WPE_CACHE.append(words)
+    hold(docs.sparkSession, "wordpiece_words", words)
     merges = _train_wordpiece_from_words(words, WP_N_MERGES)
     bare = {
         r["c"]
@@ -1812,8 +1809,6 @@ def unigram_pieces(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, "piece string, count bigint, logprob double")
 
 
-_UNI_CACHE: list = []  # unigram_encode's persisted word table (module cache)
-
 
 @register("unigram_encode", oracle=None)  # depends on the EM table → rows-only
 def unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1828,17 +1823,16 @@ def unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab-broadcast (`_encoded_words_join`); per-doc rollups are integer
     sums. The corpus is never segmented row-by-row.
 
-    The word table is persisted for the run via the module cache (ADVICE
+    The word table stays persisted until the next call (``hold``, ADVICE
     r5): train_unigram consumes it ~5 times (seed aggregate, char
     distinct, EM rounds) and the segmentation pass is a 6th, executing
     AFTER this function returns — an eager unpersist here would re-run
     the corpus word-count shuffle per consumer."""
     import pandas as pd
 
-    while _UNI_CACHE:
-        _UNI_CACHE.pop().unpersist()
+    hold(spark, "unigram_words")
     words = _unigram_words(spark, sf_dir).persist()
-    _UNI_CACHE.append(words)
+    hold(spark, "unigram_words", words)
     rows, _losses = train_unigram(words)
     logp = {p: lp for p, _c, lp in rows}
 
@@ -1991,8 +1985,6 @@ ORDER BY dw.doc_id
 # an opaque value-hash mismatch if the piece length ever changes.
 assert UNI_MAX_PIECE_LEN == 4, "_UVE_ORACLE's DP window is hardcoded to 4 cells"
 
-_UVE_CACHE: list = []  # persisted word/substring tables (unpersisted next call)
-
 
 @register("unigram_viterbi_encode", oracle=_UVE_ORACLE)
 def unigram_viterbi_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2018,15 +2010,14 @@ def unigram_viterbi_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     word stream via the guarded vocab-broadcast (`_encoded_words_join`);
     per-doc rollups are integer sums. The word table feeds the substring
     aggregate (two actions) and the segmentation pass, so it stays
-    persisted for the run via the module cache (the returned DataFrame
+    persisted until the next call (``hold``; the returned DataFrame
     executes after this function returns).
     """
     import math
 
     import pandas as pd
 
-    while _UVE_CACHE:
-        _UVE_CACHE.pop().unpersist()
+    hold(spark, "unigram_viterbi")
     docs = parallelize_scan(table(spark, sf_dir, "documents"))
     words = (
         docs.select(
@@ -2037,7 +2028,6 @@ def unigram_viterbi_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("freq"))
         .persist()
     )
-    _UVE_CACHE.append(words)
     subs = (
         words.select(
             "freq",
@@ -2053,7 +2043,7 @@ def unigram_viterbi_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("freq").alias("cnt"))
         .persist()
     )
-    _UVE_CACHE.append(subs)
+    hold(spark, "unigram_viterbi", words, subs)
     seed = (
         subs.orderBy(F.col("cnt").desc(), F.col("piece").asc())
         .limit(UNI_SEED_SIZE)

@@ -17,8 +17,10 @@ import atexit
 import os
 import shutil
 import tempfile
+import uuid
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _TMP_ROOT: str | None = None
 
@@ -85,6 +87,93 @@ def stream_state_parts(spark: SparkSession, n: int | None = None):
             spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     return _ctx()
+
+
+# Session-scoped resources: frames a builder's returned lazy plan still
+# reads, memory-sink views, and staged arrival dirs. Entries belong to the
+# live SparkContext: after ``spark.stop()`` the next context starts from an
+# empty registry, so nothing ever calls into the stopped one (its frames
+# and views died with it). Keyed on the applicationId, not the session —
+# held frames reference their session, so weak session keys never die.
+_LIVE: dict[str, dict] = {}
+
+
+def _live(spark: SparkSession) -> dict:
+    app = spark.sparkContext.applicationId
+    if app not in _LIVE:
+        _LIVE.clear()
+        _LIVE[app] = {}
+    return _LIVE[app]
+
+
+def hold(spark: SparkSession, slot: str, *items: DataFrame | str) -> None:
+    """Release what ``slot`` held, then hold ``items`` until the next
+    ``hold`` on the same slot. A builder cannot unpersist a frame its
+    returned plan still reads, so the next call releases it instead —
+    repeated calls keep one generation alive, never an unbounded pile.
+    DataFrames are unpersisted and, when ``localCheckpoint``'ed, their RDD
+    blocks freed (``free_local_checkpoint`` skips other plans); strings are
+    temp-view names and are dropped.
+
+    Call with no items BEFORE re-persisting: a new frame whose plan equals
+    the held one shares its cache entry, so releasing the old frame after
+    the new ``persist()`` would uncache both."""
+    from flink_mm_spark.algos.damds import free_local_checkpoint
+
+    res = _live(spark)
+    for item in res.pop(("hold", slot), ()):
+        if isinstance(item, str):
+            spark.catalog.dropTempView(item)
+        else:
+            item.unpersist()
+            free_local_checkpoint(item)
+    if items:
+        res[("hold", slot)] = items
+
+
+def staged(
+    spark: SparkSession, key, prefix: str, write: Callable[[str], object]
+) -> str:
+    """A ``scratch_dir(prefix)`` that ``write`` fills once per (context,
+    prefix, key); later calls return the same dir untouched. Arrival
+    splits are staged this way so repeated invocations (bench medians,
+    grading after tests) stream the identical files instead of
+    re-writing them."""
+    res = _live(spark)
+    path = res.get(("staged", prefix, key))
+    if path is None:
+        path = scratch_dir(prefix)
+        write(path)
+        res[("staged", prefix, key)] = path
+    return path
+
+
+def drain_to_memory(
+    spark: SparkSession,
+    df: DataFrame,
+    slot: str,
+    mode: str,
+    parts: int | None = None,
+    ckpt: str | None = None,
+) -> DataFrame:
+    """Run the streaming ``df`` to completion into a memory sink
+    (``availableNow``, output ``mode``, under ``stream_state_parts(parts)``)
+    and return the sink table. The sink view ``{slot}_<hex>`` is held in
+    ``slot``, so each call drops the previous call's view instead of
+    pinning every drained result in driver memory for the session."""
+    name = f"{slot}_{uuid.uuid4().hex[:8]}"
+    hold(spark, slot, name)
+    with stream_state_parts(spark, parts):
+        q = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .option("checkpointLocation", ckpt or scratch_dir(f"{slot}_ckpt_"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return spark.table(name)
 
 
 def get_spark(

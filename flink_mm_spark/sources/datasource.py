@@ -421,8 +421,9 @@ def binmatrix_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     read (pushdown-pruned), distributed write, and now an offset-tracked
     stream (the shape a continuously-appended matrix feed takes at scale).
     """
-    from flink_mm_spark.session import scratch_dir
     import uuid
+
+    from flink_mm_spark.session import hold, scratch_dir
 
     path = ensure_fixture(_R, _C, "float64", "big")
     register_binmatrix(spark)
@@ -437,6 +438,7 @@ def binmatrix_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(path)
     )
     name = f"binmatrix_stream_{uuid.uuid4().hex[:8]}"
+    hold(spark, "binmatrix_stream", name)  # drops the previous call's sink view
     q = (
         stream.writeStream.format("memory")
         .queryName(name)

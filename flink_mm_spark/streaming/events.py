@@ -390,6 +390,10 @@ def followup_join_stream(
 
 from flink_mm_spark.operators.relational import _HLL_ORACLE  # noqa: E402
 from flink_mm_spark.registry import register  # noqa: E402
+from flink_mm_spark.session import (  # noqa: E402
+    STREAM_STATE_PARTS_SMALL,
+    drain_to_memory,
+)
 
 
 @register(
@@ -418,9 +422,6 @@ def events_hourly_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     graded complete-mode here because an unbounded memory sink only holds
     hours×types rows.)
     """
-    from flink_mm_spark.session import scratch_dir
-    import uuid
-
     stream = events_stream(spark, sf_dir, glob="events.parquet")
     agg = (
         stream.groupBy(
@@ -432,20 +433,9 @@ def events_hourly_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
         )
     )
-    name = f"events_hourly_streamed_{uuid.uuid4().hex[:8]}"
-    from flink_mm_spark.session import stream_state_parts
-
-    with stream_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", scratch_dir("ehs_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).orderBy("window_start", "event_type")
+    return drain_to_memory(spark, agg, "events_hourly_streamed", "complete").orderBy(
+        "window_start", "event_type"
+    )
 
 
 @register(
@@ -496,9 +486,6 @@ def user_sessions_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a watermark — state per user is bounded by the gap horizon; the
     memory sink only holds the finished session rows here.)
     """
-    from flink_mm_spark.session import scratch_dir
-    import uuid
-
     stream = events_stream(spark, sf_dir, glob="events.parquet")
     agg = (
         stream.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
@@ -514,20 +501,9 @@ def user_sessions_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = f"user_sessions_streamed_{uuid.uuid4().hex[:8]}"
-    from flink_mm_spark.session import stream_state_parts
-
-    with stream_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", scratch_dir("uss_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).orderBy("user_id", "start_us")
+    return drain_to_memory(spark, agg, "user_sessions_streamed", "complete").orderBy(
+        "user_id", "start_us"
+    )
 
 
 @register(
@@ -560,9 +536,6 @@ def events_enriched_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     TBs of events) and the only wide exchange is the final (nation, type)
     aggregate — the same plan AQE picks for the batch twin.
     """
-    from flink_mm_spark.session import scratch_dir
-    import uuid
-
     from flink_mm_spark.sources.tables import table as _table
 
     stream = events_stream(spark, sf_dir, glob="events.parquet")
@@ -577,20 +550,8 @@ def events_enriched_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
         )
     )
-    name = f"events_enriched_streamed_{uuid.uuid4().hex[:8]}"
-    from flink_mm_spark.session import stream_state_parts
-
-    with stream_state_parts(spark):
-        q = (
-            enriched.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", scratch_dir("ees_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).orderBy("nation", "event_type")
+    drained = drain_to_memory(spark, enriched, "events_enriched_streamed", "complete")
+    return drained.orderBy("nation", "event_type")
 
 
 @register(
@@ -630,9 +591,6 @@ def events_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon (a stream's span is unbounded); here the span IS the horizon
     because the second copy can trail by the whole corpus.
     """
-    from flink_mm_spark.session import scratch_dir
-    import uuid
-
     from flink_mm_spark.sources.tables import table
 
     span = (
@@ -654,20 +612,9 @@ def events_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
     )
-    name = f"events_dedup_streamed_{uuid.uuid4().hex[:8]}"
-    from flink_mm_spark.session import stream_state_parts
-
-    with stream_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", scratch_dir("eds_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).orderBy("event_type")
+    return drain_to_memory(spark, agg, "events_dedup_streamed", "complete").orderBy(
+        "event_type"
+    )
 
 
 @register(
@@ -702,9 +649,6 @@ def click_purchase_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user_id) is the shuffle key and skewed users split under AQE exactly
     as in the batch twin (``event_followups_range_join``).
     """
-    from flink_mm_spark.session import scratch_dir
-    import uuid
-
     clicks = events_stream(spark, sf_dir, glob="events.parquet").filter(
         F.col("event_type") == "click"
     )
@@ -717,20 +661,8 @@ def click_purchase_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "purchase_id",
         (F.unix_micros("c_ts") - F.unix_micros("p_ts")).cast("long").alias("gap_us"),
     )
-    name = f"click_purchase_streamed_{uuid.uuid4().hex[:8]}"
-    from flink_mm_spark.session import stream_state_parts
-
-    with stream_state_parts(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", scratch_dir("cps_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).orderBy("user_id", "click_id", "purchase_id")
+    drained = drain_to_memory(spark, joined, "click_purchase_streamed", "append")
+    return drained.orderBy("user_id", "click_id", "purchase_id")
 
 
 @register(
@@ -759,9 +691,6 @@ def events_sliding_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     splits and row order, and windows compare as epoch-microsecond
     integers.
     """
-    from flink_mm_spark.session import scratch_dir
-    import uuid
-
     stream = events_stream(spark, sf_dir, glob="events.parquet")
     agg = (
         stream.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))
@@ -771,20 +700,9 @@ def events_sliding_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.unix_micros(F.col("w.start")).alias("start_us"), "n", "sum_value")
     )
-    name = f"events_sliding_streamed_{uuid.uuid4().hex[:8]}"
-    from flink_mm_spark.session import stream_state_parts
-
-    with stream_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", scratch_dir("esl_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).orderBy("start_us")
+    return drain_to_memory(spark, agg, "events_sliding_streamed", "complete").orderBy(
+        "start_us"
+    )
 
 
 @register(
@@ -813,14 +731,12 @@ def user_stats_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles. State is one fixed tuple per user — O(users) state store at
     any stream length.
     """
-    from flink_mm_spark.session import scratch_dir
-    import uuid
-
     import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.window import Window
 
+    from flink_mm_spark.session import scratch_dir
     from flink_mm_spark.sources.tables import table as _table
 
     src_dir = scratch_dir("uss_src_")
@@ -859,23 +775,10 @@ def user_stats_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = stream.groupBy("user_id").applyInPandasWithState(
         update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    name = f"user_stats_streamed_{uuid.uuid4().hex[:8]}"
-    from flink_mm_spark.session import stream_state_parts
-
-    with stream_state_parts(spark):
-        q = (
-            stats.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", scratch_dir("ust_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drained = drain_to_memory(spark, stats, "user_stats_streamed", "update")
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
-        spark.table(name)
-        .withColumn("rn", F.row_number().over(w))
+        drained.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("user_id", "n_events", "sum_micros", "max_value")
         .orderBy("user_id")
@@ -924,8 +827,6 @@ def events_hll_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows); the estimator rollup and the exact-count comparison column are
     batch post-processing on the finished register table.
     """
-    import uuid
-
     from flink_mm_spark.operators.relational import (
         HLL_M,
         _HLL_ALPHA,
@@ -933,31 +834,16 @@ def events_hll_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         _HLL_LOW,
         _HLL_NUM,
     )
-    from flink_mm_spark.session import scratch_dir
     from flink_mm_spark.sources.tables import table
 
     stream = events_stream(spark, sf_dir, glob="events.parquet")
     regs = hll_register_stream(stream)
-    name = f"events_hll_streamed_{uuid.uuid4().hex[:8]}"
-    from flink_mm_spark.session import (
-        STREAM_STATE_PARTS_SMALL,
-        stream_state_parts,
-    )
-
     # sketch state is O(registers/cells) — known-small key space
-    with stream_state_parts(spark, STREAM_STATE_PARTS_SMALL):
-        q = (
-            regs.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", scratch_dir("hll_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drained = drain_to_memory(
+        spark, regs, "events_hll_streamed", "complete", STREAM_STATE_PARTS_SMALL
+    )
     agg = (
-        spark.table(name)
-        .groupBy("event_type")
+        drained.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("registers_used"),
             F.sum(F.expr(f"{_HLL_LOW} DIV maxv")).alias("hp"),
@@ -1085,31 +971,15 @@ def events_cms_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     here holds ≤ CM_D·CM_W rows. Estimates upper-bound truth
     (est ≥ exact — collisions only ever add).
     """
-    import uuid
-
     from flink_mm_spark.operators.relational import CM_D, CM_W
-    from flink_mm_spark.session import scratch_dir
     from flink_mm_spark.sources.tables import table
 
     stream = events_stream(spark, sf_dir, glob="events.parquet")
     cells = cms_cell_stream(stream)
-    name = f"events_cms_streamed_{uuid.uuid4().hex[:8]}"
-    from flink_mm_spark.session import (
-        STREAM_STATE_PARTS_SMALL,
-        stream_state_parts,
-    )
-
     # sketch state is O(registers/cells) — known-small key space
-    with stream_state_parts(spark, STREAM_STATE_PARTS_SMALL):
-        q = (
-            cells.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", scratch_dir("cms_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drained = drain_to_memory(
+        spark, cells, "events_cms_streamed", "complete", STREAM_STATE_PARTS_SMALL
+    )
     rows = spark.range(CM_D).select(F.col("id").cast("int").alias("r"))
     probes = spark.createDataFrame(
         [(u,) for u in CMS_PROBE_USERS], "user_id bigint"
@@ -1137,7 +1007,7 @@ def events_cms_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "r", col.alias("col")
     )
     est = (
-        lookups.join(F.broadcast(spark.table(name)), ["r", "col"])
+        lookups.join(F.broadcast(drained), ["r", "col"])
         .groupBy("user_id")
         .agg(F.min("cnt").cast("long").alias("est_events"))
     )

@@ -897,10 +897,14 @@ def test_embedding_covariance_streamed_assembly_over_checkpoint(spark):
     assert "Exchange hashpartitioning" not in plan, plan[:3000]
     assert "Python" not in plan and "MapInPandas" not in plan
     assert "FileScan" not in plan  # assembly reads the drained state only
-    from flink_mm_spark.streaming.embeddings import _COV_SINK_CACHE
-
-    assert _COV_SINK_CACHE, "sink table name not cached"
-    n_rows = spark.table(_COV_SINK_CACHE[-1]).count()
+    # drain_to_memory holds exactly one ``{slot}_<hex>`` sink view per slot
+    sinks = [
+        t.name
+        for t in spark.catalog.listTables()
+        if t.name.startswith("embedding_covariance_streamed_")
+    ]
+    assert len(sinks) == 1, sinks
+    n_rows = spark.table(sinks[0]).count()
     # r13: the accumulator holds the UPPER TRIANGLE only (mirror cells
     # are bit-equal by decimal commutativity, re-expanded after drain)
     assert n_rows == EMB_DIM * (EMB_DIM + 1) // 2 + EMB_DIM + 1

@@ -182,11 +182,12 @@ from tests.conftest import SF_DIR
 
 
 def test_module_caches_swap_not_accumulate(spark):
-    """The r8 module caches (_UVE/_KB/_XSO) follow the repo's swap
-    contract: a second invocation unpersists the previous call's tables
-    before persisting its own, so repeated use holds the persisted-block
-    count steady instead of growing it run over run (a leak here would
-    fill the block manager across a long interactive session)."""
+    """The r8 held tables (``session.hold`` slots of the entries below)
+    follow the repo's swap contract: a second invocation releases the
+    previous call's tables before persisting its own, so repeated use
+    holds the persisted-block count steady instead of growing it run over
+    run (a leak here would fill the block manager across a long
+    interactive session)."""
     from flink_mm_spark import registry
 
     registry.load_all()
@@ -198,8 +199,8 @@ def test_module_caches_swap_not_accumulate(spark):
         "unigram_viterbi_encode",
         "dedup_keep_best",
         "cross_source_overlap",
-        "ngram_novelty",  # _NOV_CACHE (ADVICE r8 #2: was unguarded)
-        "dedup_components_exact",  # _CC_CACHE in connected_components (ADVICE r8 #1)
+        "ngram_novelty",  # ADVICE r8 #2: was unguarded
+        "dedup_components_exact",  # connected_components' slot (ADVICE r8 #1)
     ):
         fn = registry.QUERIES[name].fn
         fn(spark, SF_DIR).count()

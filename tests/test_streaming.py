@@ -627,8 +627,8 @@ def test_minhash_dedup_stream_restart_recovery(spark, tmp_path):
 
 
 def test_minhash_dedup_split_cache_reuses_files(spark):
-    """minhash_dedup_streamed caches its 4-file arrival split per
-    (process, sf_dir): the second invocation must stream the IDENTICAL
+    """minhash_dedup_streamed stages its 4-file arrival split once per
+    sf_dir (``session.staged``): the second invocation must stream the IDENTICAL
     files (same source dir, no rewrite) — results are arrival-order
     independent either way, so the cache changes cost, not semantics;
     this pins that it actually engages (bench medians re-run the entry
@@ -636,16 +636,19 @@ def test_minhash_dedup_split_cache_reuses_files(spark):
     import os
 
     from flink_mm_spark import registry
-    from flink_mm_spark.streaming import documents as docmod
+    from flink_mm_spark.session import staged
     from tests.conftest import SF_DIR
+
+    def not_staged(path):
+        raise AssertionError("the arrival split was not staged")
 
     registry.load_all()
     fn = registry.QUERIES["minhash_dedup_streamed"].fn
     r1 = sorted(tuple(r) for r in fn(spark, SF_DIR).collect())
-    src = docmod._SRC_SPLIT_CACHE[SF_DIR]
+    src = staged(spark, SF_DIR, "mds_src_", not_staged)
     mtimes = {f: os.path.getmtime(os.path.join(src, f)) for f in os.listdir(src)}
     r2 = sorted(tuple(r) for r in fn(spark, SF_DIR).collect())
-    assert docmod._SRC_SPLIT_CACHE[SF_DIR] == src
+    assert staged(spark, SF_DIR, "mds_src_", not_staged) == src
     assert {
         f: os.path.getmtime(os.path.join(src, f)) for f in os.listdir(src)
     } == mtimes  # not rewritten
@@ -1565,3 +1568,49 @@ def test_drain_with_timers_expected_batches_skips_empty_wait(spark, tmp_path):
     assert sum(1 for p in fast_prog if no_file(p)) <= 1, len(fast_prog)
     key = lambda rows: sorted((r["doc_a"], r["doc_b"], r["est_jaccard"]) for r in rows)  # noqa: E731
     assert key(fast) == key(slow)
+
+
+def test_drain_with_timers_counts_batches_past_progress_buffer(spark, tmp_path):
+    """The expected_batches fast path must not depend on how many entries
+    ``recentProgress`` retains (ADVICE r14): with the buffer cut to ONE
+    entry, the drain still stops once every file-consuming batch has
+    committed — at most one empty timer batch, never the two the offset
+    rule waits out."""
+    from flink_mm_spark.streaming.documents import (
+        STREAM_HOT_CAP,
+        documents_stream,
+        drain_with_timers,
+        minhash_band_rows,
+        minhash_band_store,
+    )
+
+    pdfs = _synthetic_arrival_corpus()
+    src = str(tmp_path / "arrivals")
+    _write_arrival_files(pdfs, src)
+    conf = "spark.sql.streaming.numRecentProgressUpdates"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "2")  # trimmed while len >= retention: keeps ONE
+    try:
+        got = []
+        q = (
+            minhash_band_store(
+                minhash_band_rows(
+                    documents_stream(spark, src, max_files_per_trigger=1)
+                ),
+                cap=STREAM_HOT_CAP,
+                ttl_minutes=60,
+            )
+            .writeStream.foreachBatch(lambda df, bid: got.extend(df.collect()))
+            .outputMode("append")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        drain_with_timers(q, poll_s=0.05, max_wall_s=120, expected_batches=len(pdfs))
+        assert len(q.recentProgress) == 1
+        n_batches = q.lastProgress["batchId"] + 1
+    finally:
+        spark.conf.set(conf, prev)
+    # every file's batch committed (none cut off), at most one empty one
+    assert len(pdfs) <= n_batches <= len(pdfs) + 1, n_batches
+    assert got  # the synthetic corpus plants near-dup pairs
