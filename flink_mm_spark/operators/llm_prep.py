@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from flink_mm_spark.operators.dedup import norm_text, shingles_from_tokens, tokens_expr
 from flink_mm_spark.operators.text import STOPWORDS, _sql_list
 from flink_mm_spark.registry import register
-from flink_mm_spark.session import hold, staged
+from flink_mm_spark.session import drain_to_parquet, hold, staged
 from flink_mm_spark.sources.tables import parallelize_scan, table
 
 # Redaction patterns — plain character classes + bounded repetition only,
@@ -1043,28 +1043,16 @@ def shard_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-def idempotent_shard_append(df: DataFrame, batch_id: int, dst: str) -> None:
-    """EXACTLY-ONCE micro-batch shard append (VERDICT r10 #1).
-
-    ``foreachBatch`` is at-least-once: after a failure between the append
-    and the checkpoint commit, Structured Streaming REPLAYS the batch —
-    with a plain ``mode("append")`` writer the replayed slices land twice
-    (the duplication the xor manifest detects but cannot prevent,
-    tests/test_streaming.py::test_shard_manifest_catches_duplicated_append).
-    The fix is a batchId-DETERMINISTIC subpath with overwrite semantics:
-    batch ``b`` always writes ``dst/ingest=b/shard_id=*/...``, so a replay
-    REPLACES its own previous (possibly partial) output instead of
-    appending alongside it — the committed directory tree is a pure
-    function of the replayed offsets, whatever crashed in between. The
-    overwrite itself rides the file-sink commit protocol (per-task temp
-    files promoted on job commit — the temp-then-commit contract of the
-    binmatrix sink, sources/datasource.py:228-330); crash debris under the
-    batch dir is ``_``-prefixed and invisible to the read-back, and the
-    next replay clears it. Proven by a kill-mid-append two-life restart
-    test (tests/test_streaming.py::test_shard_append_restart_exactly_once):
-    life 1 appends batch 1 then dies BEFORE the commit; life 2 replays it
-    and the final manifest value-hash-equals the one-shot batch write —
-    zero duplicate slices.
+def idempotent_shard_append(df: DataFrame, path: str) -> None:
+    """EXACTLY-ONCE micro-batch shard writer (VERDICT r10 #1) for
+    ``session.drain_to_parquet``: overwrites the batch's ``path`` with its
+    slices partitioned by ``shard_id``, so a batch replayed after a
+    mid-append failure replaces its own output — the plain
+    ``mode("append")`` writer duplicated it (the failure mode
+    tests/test_streaming.py::test_shard_manifest_catches_duplicated_append
+    proves the xor manifest detects). Pinned by the kill-mid-append
+    two-life restart test
+    (tests/test_streaming.py::test_shard_append_restart_exactly_once).
 
     r13 optimization (guide §2.5/§6): a one-file micro-batch is a single
     task, so the ``partitionBy`` write created every shard's file
@@ -1077,9 +1065,7 @@ def idempotent_shard_append(df: DataFrame, batch_id: int, dst: str) -> None:
     only the micro-batch's rows. Measured 5.0-8.9 s; the manifest
     rollup of both layouts compares equal (xor fingerprints are
     order-insensitive by design)."""
-    _shard_append_df(df).write.mode("overwrite").partitionBy(
-        "shard_id"
-    ).parquet(f"{dst}/ingest={batch_id}")
+    _shard_append_df(df).write.mode("overwrite").partitionBy("shard_id").parquet(path)
 
 
 def _shard_append_df(df: DataFrame) -> DataFrame:
@@ -1092,7 +1078,7 @@ def _shard_append_df(df: DataFrame) -> DataFrame:
 
 
 def read_back_shards(spark: SparkSession, dst: str) -> DataFrame:
-    """Read every committed batch's shards under an idempotent-append
+    """Read every committed batch's shards under a ``drain_to_parquet``
     destination. Partition discovery surfaces the ``ingest`` batch key and
     the ``shard_id``; the manifest contract is shard-keyed bigint, so the
     batch key drops and shard_id casts up (directory discovery infers
@@ -1108,9 +1094,8 @@ def read_back_shards(spark: SparkSession, dst: str) -> DataFrame:
 def shard_append_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL shard append — the streamed last mile (VERDICT r9 #5),
     composing the r9 families end-to-end: packed training slices ARRIVE
-    over time (4 staged arrival files, one per micro-batch) and a
-    ``foreachBatch`` writer appends each micro-batch's slices as new
-    shard-partitioned parquet; the manifest — counts, token mass,
+    over time (4 staged arrival files, one per micro-batch) and each
+    micro-batch's slices land as new shard-partitioned parquet; the manifest — counts, token mass,
     xor-of-md5 content fingerprint — is then RECOMPUTED by
     ``_shard_rollup`` over the read-back of everything appended and graded
     against the same oracle as the one-shot batch write. A slice lost,
@@ -1118,12 +1103,10 @@ def shard_append_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the value hash; xor makes the fingerprint indifferent to which batch
     (or task) wrote each slice.
 
-    EXACTLY-ONCE (r11, VERDICT r10 #1): the writer is
-    ``idempotent_shard_append`` — each micro-batch owns a
-    batchId-deterministic ``ingest=<b>`` subdirectory written with
-    overwrite semantics, so a batch replayed after a mid-append failure
-    replaces its own output instead of duplicating it; the kill-mid-append
-    restart test pins zero duplicate slices across a forced replay.
+    EXACTLY-ONCE (r11, VERDICT r10 #1): the stream drains through
+    ``session.drain_to_parquet`` with ``idempotent_shard_append`` as the
+    writer; the kill-mid-append restart test pins zero duplicate slices
+    across a forced replay.
 
     Scale shape: per micro-batch the plan is ONE file scan of the
     arriving slices, ONE batch-sized exchange hashing the rows on
@@ -1136,8 +1119,6 @@ def shard_append_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     another batch's data. The verify side is the roundtrip entry's: one
     scan + one shard-keyed aggregate. Reference analogue:
     mm/MatrixMultiply.java:88-103 (write-then-compare oracle pattern)."""
-    from flink_mm_spark.session import scratch_dir
-
     # stage the packed slice stream as 4 arrival files once per sf_dir:
     # the rollup is order- and split-independent, so reuse changes cost,
     # not semantics (the _arrival_split rule)
@@ -1150,23 +1131,13 @@ def shard_append_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(path),
     )
-    slice_schema = spark.read.parquet(src).schema
-    dst = scratch_dir("sas_dst_")  # fresh per invocation: appends accumulate
     stream = (
-        spark.readStream.schema(slice_schema)
+        spark.readStream.schema(spark.read.parquet(src).schema)
         .option("maxFilesPerTrigger", 1)
         .option("pathGlobFilter", "*.parquet")
         .parquet(src)
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: idempotent_shard_append(df, bid, dst)
-        )
-        .option("checkpointLocation", scratch_dir("sas_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    dst = drain_to_parquet(stream, idempotent_shard_append)
     return _shard_rollup(read_back_shards(spark, dst))
 
 

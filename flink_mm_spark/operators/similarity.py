@@ -23,7 +23,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_mm_spark.registry import register
-from flink_mm_spark.session import drain_to_memory, hold, staged
+from flink_mm_spark.session import (
+    drain_to_memory,
+    drain_to_parquet,
+    hold,
+    staged,
+    write_arrivals,
+)
 from flink_mm_spark.sources.tables import table
 
 EMB_DIM = 64
@@ -599,42 +605,14 @@ def _pq_encode_block(cb: np.ndarray, pdf: pd.DataFrame) -> np.ndarray:
 
 
 def _pqs_query_split(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the PQS_NQ query vectors as one-row parquet files with
-    strictly increasing mtimes, so the file source delivers them one per
-    micro-batch in qid order — the same content-determined arrival
-    staging as ``deterministic_arrival_split`` (streaming/documents.py).
-    Staged once per sf_dir; the result is arrival-order independent
-    (each query's top-k depends only on the static index), so reuse
-    changes cost, not semantics."""
-    import glob
-    import os
-    import shutil
-
-    from flink_mm_spark.session import scratch_dir
+    """Stage the PQS_NQ query vectors as one arrival file each, in qid
+    order, once per sf_dir; the result is arrival-order independent (each
+    query's top-k depends only on the static index), so reuse changes
+    cost, not semantics."""
 
     def write(src: str) -> None:
-        e = embeddings64(spark, sf_dir)
-        t0 = int(os.path.getmtime(src)) - 3600
-        # ONE pass for all PQS_NQ query files (VERDICT r12 nit): a
-        # duplicated partition column keeps vec_id in the data files
-        # (partitionBy drops its own column), and repartition by it
-        # collapses each query into exactly one task → one file
-        tmp = scratch_dir("pqs_q_tmp_")
-        (
-            e.filter(F.col("vec_id") < PQS_NQ)
-            .select("vec_id", "emb", F.col("vec_id").alias("qfile"))
-            .repartition("qfile")
-            .write.partitionBy("qfile")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        for k in range(PQS_NQ):
-            parts = glob.glob(f"{tmp}/qfile={k}/part-*.parquet")
-            assert len(parts) == 1, parts
-            dst = f"{src}/query{k}.parquet"
-            shutil.move(parts[0], dst)
-            os.utime(dst, (t0 + 10 * k, t0 + 10 * k))
-        shutil.rmtree(tmp, ignore_errors=True)
+        q = embeddings64(spark, sf_dir).select("vec_id", "emb")
+        write_arrivals([q.filter(F.col("vec_id") == k) for k in range(PQS_NQ)], src)
 
     return staged(spark, sf_dir, "pqs_q_", write)
 
@@ -691,8 +669,9 @@ def pq_topk_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook/sqdist machinery as ``pq_adc_topk`` (``_pq_codebook`` /
     ``_pq_sqdist_int`` — one definition, so qid 0's ranking is
     bit-identical to the batch entry, pinned in tests/test_similarity.py);
-    per arriving query the driver expands an (S×K) integer LUT, broadcasts
-    it, and the batch's top-k is ADC int64 sums over the code table.
+    per arriving query the driver expands an (S×K) integer LUT, ships it
+    in the scoring closure, and the batch's top-k is ADC int64 sums over
+    the code table.
 
     Integer-exactness contract carried over verbatim: every subspace
     distance is a left-associative float64 sum quantized immediately via
@@ -700,26 +679,22 @@ def pq_topk_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id) ranking are pure int64 math on both engines — the oracle is
     the batch ADC replay generalized to a per-qid LUT.
 
-    Execution: the query stream is foreachBatch (per-batch ranking job —
-    collecting a QUERY batch to the driver is query-sized by definition,
-    never corpus-sized); scoring is one mapInPandas scan of the persisted
-    code table emitting each query's PARTITION-LOCAL top-k (a lossless
-    reduction: any global top-k row is its own partition's top-k row),
-    then one qid-keyed window ranks the ≤ partitions×k×queries survivors.
-    Each batch writes a batchId-deterministic ``ingest=<b>`` overwrite
-    subpath — the ``idempotent_shard_append`` exactly-once pattern, so a
-    replayed batch replaces its own output.
+    Execution: the query stream drains through ``drain_to_parquet``
+    (per-batch ranking job — collecting a QUERY batch to the driver is
+    query-sized by definition, never corpus-sized); scoring is one
+    mapInPandas scan of the persisted code table emitting each query's
+    PARTITION-LOCAL top-k (a lossless reduction: any global top-k row is
+    its own partition's top-k row), then one qid-keyed window ranks the
+    ≤ partitions×k×queries survivors.
 
     Scale shape: the encode pass is the compression scan a 100 TB corpus
     runs once (256 B → 8 B per vector) and amortizes across every query
     batch; per batch the scan touches codes only (8 B/vector), the
     exchange is the reduced local-top-k set (partitions × queries × k
-    rows), and the LUT broadcast is S×K×8 B per query. Composes with IVF
+    rows), and the LUT closure is S×K×8 B per query. Composes with IVF
     exactly like the batch tier (probe cells partition the code table).
     """
     from pyspark.sql.window import Window
-
-    from flink_mm_spark.session import scratch_dir
 
     e = embeddings64(spark, sf_dir)
     cb = _pq_codebook(e)
@@ -743,9 +718,7 @@ def pq_topk_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes.count()
     hold(spark, "pq_topk_streamed", codes)
 
-    spool = scratch_dir("pqs_out_")
-
-    def score_batch(qdf: DataFrame, bid: int) -> None:
+    def score_batch(qdf: DataFrame, path: str) -> None:
         qrows = qdf.select("vec_id", "emb").collect()  # query-batch-sized
         if not qrows:
             return
@@ -764,17 +737,15 @@ def pq_topk_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             for r in qrows
         }
-        b = codes.sparkSession.sparkContext.broadcast(luts)
 
         def score(batches):
-            tabs = b.value
             srange = np.arange(PQ_S)
             for pdf in batches:
                 if not len(pdf):
                     continue
                 cds = np.vstack(pdf["codes"].to_numpy()).astype(np.int64)
                 vids = pdf["vec_id"].to_numpy(dtype=np.int64)
-                for qid, lut in tabs.items():
+                for qid, lut in luts.items():
                     est = lut[srange[None, :], cds].sum(axis=1)
                     # exact (est_micro, vec_id) partition-local top-k
                     idx = np.lexsort((vids, est))[:PQ_TOPK]
@@ -791,26 +762,15 @@ def pq_topk_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         topk = local.withColumn("rnk", F.row_number().over(w)).filter(
             F.col("rnk") <= PQ_TOPK
         )
-        topk.write.mode("overwrite").parquet(f"{spool}/ingest={bid}")
-        # the write above is this batch's only consumer: release the LUT
-        # broadcast instead of accumulating one per micro-batch (ADVICE
-        # r12 — harmless at PQS_NQ batches, a leak at a real query rate)
-        b.unpersist()
+        topk.write.mode("overwrite").parquet(path)
 
     qstream = (
         spark.readStream.schema("vec_id long, emb array<double>")
         .option("maxFilesPerTrigger", 1)
         .parquet(_pqs_query_split(spark, sf_dir))
     )
-    q = (
-        qstream.writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", scratch_dir("pqs_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.read.parquet(spool)
+        spark.read.parquet(drain_to_parquet(qstream, score_batch))
         .drop("ingest")
         .withColumn("rnk", F.col("rnk").cast("int"))
         .orderBy("qid", "rnk")
@@ -850,9 +810,9 @@ def pq_encode_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL index build — the other half of the retrieval
     lifecycle (r12): corpus vectors ARRIVE over micro-batches and are
     encoded against the FROZEN codebook into the at-rest PQ code table,
-    each batch appended through the exactly-once overwrite-subpath
-    writer. With `pq_topk_streamed` this closes the full production loop:
-    the index is BUILT incrementally as the corpus arrives and QUERIED
+    each batch written through the exactly-once ``drain_to_parquet``.
+    With `pq_topk_streamed` this closes the full production loop: the
+    index is BUILT incrementally as the corpus arrives and QUERIED
     incrementally as queries arrive, both sides graded by replays of the
     one shared codes/LUT definition (`_pq_codebook` / `_pq_sqdist_int` /
     `_pq_encode_block`).
@@ -869,11 +829,7 @@ def pq_encode_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per micro-batch ONE mapInPandas scan of the arrivals
     (the 256 B → 8 B compression pass) and a partitioned write — no
-    exchange anywhere; a replayed batch overwrites its own
-    ``ingest=<b>`` subpath (the `idempotent_shard_append` guarantee).
-    The verify side is one scan of the read-back."""
-    from flink_mm_spark.session import scratch_dir
-
+    exchange anywhere. The verify side is one scan of the read-back."""
     e = embeddings64(spark, sf_dir)
     cb = _pq_codebook(e)
     # stage the corpus as 4 arrival files (order-independent output,
@@ -900,23 +856,17 @@ def pq_encode_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    dst = scratch_dir("pqe_dst_")
-
-    def append_codes(df: DataFrame, bid: int) -> None:
+    def append_codes(df: DataFrame, path: str) -> None:
         df.mapInPandas(encode, "vec_id long, pq_code string").write.mode(
             "overwrite"
-        ).parquet(f"{dst}/ingest={bid}")
+        ).parquet(path)
 
-    q = (
+    dst = drain_to_parquet(
         spark.readStream.schema("vec_id long, emb array<double>")
         .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(append_codes)
-        .option("checkpointLocation", scratch_dir("pqe_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+        .parquet(src),
+        append_codes,
     )
-    q.awaitTermination()
     return spark.read.parquet(dst).drop("ingest").orderBy("vec_id")
 
 
@@ -1032,63 +982,6 @@ def _onl_wave_dfs(e: DataFrame) -> list[DataFrame]:
     ]
 
 
-def _write_wave_files(waves: list[DataFrame], src: str, start_k: int = 0) -> None:
-    """Write each wave as one mtime-ordered parquet file under ``src``
-    (file k gets mtime t0 + 10k, anchored safely in the past), so the
-    file source delivers them one per micro-batch in wave order."""
-    import glob
-    import os
-    import shutil
-
-    from flink_mm_spark.session import scratch_dir
-
-    os.makedirs(src, exist_ok=True)
-    t0 = int(os.path.getmtime(src)) - 3600
-    for i, df in enumerate(waves):
-        k = start_k + i
-        tmp = scratch_dir("onl_tmp_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        parts = glob.glob(f"{tmp}/part-*.parquet")
-        dst = f"{src}/arrival{k}.parquet"
-        shutil.move(parts[0], dst)
-        os.utime(dst, (t0 + 10 * k, t0 + 10 * k))
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _write_wave_files_onepass(
-    spark: SparkSession, waves: list[DataFrame], src: str
-) -> None:
-    """One-job variant of ``_write_wave_files`` for the full-sequence
-    staging path (VERDICT r12 #4: the 6 sequential coalesce(1) jobs were
-    first-call driver-wall, not semantics): union the waves under a
-    ``wave`` column, repartition BY that column (each wave collapses into
-    exactly one task → exactly one file per ``wave=k`` dir), write once
-    with partitionBy, then move each file into place with its staged
-    mtime. Row order inside a wave file is not preserved — irrelevant by
-    construction: the stateful operator sorts corpus rows by id and query
-    results are qid-windowed."""
-    import functools
-    import glob
-    import os
-    import shutil
-
-    from flink_mm_spark.session import scratch_dir
-
-    os.makedirs(src, exist_ok=True)
-    t0 = int(os.path.getmtime(src)) - 3600
-    tagged = [df.withColumn("wave", F.lit(k)) for k, df in enumerate(waves)]
-    u = functools.reduce(DataFrame.unionByName, tagged).repartition("wave")
-    tmp = scratch_dir("onl_tmp_")
-    u.write.partitionBy("wave").mode("overwrite").parquet(tmp)
-    for k in range(len(waves)):
-        parts = glob.glob(f"{tmp}/wave={k}/part-*.parquet")
-        assert len(parts) == 1, parts  # repartition("wave") → 1 task per wave
-        dst = f"{src}/arrival{k}.parquet"
-        shutil.move(parts[0], dst)
-        os.utime(dst, (t0 + 10 * k, t0 + 10 * k))
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
 def _merge_waves(waves: list[DataFrame], groups: list[list[int]]) -> list[DataFrame]:
     """Union consecutive waves into per-micro-batch files. Legal whenever
     the in-batch kind ordering (deletes → adds → queries, the documented
@@ -1127,8 +1020,7 @@ def _onl_arrival_split(spark: SparkSession, sf_dir: str) -> str:
         spark,
         sf_dir,
         "onl_src_",
-        lambda src: _write_wave_files_onepass(
-            spark,
+        lambda src: write_arrivals(
             _merge_waves(
                 _onl_wave_dfs(embeddings64(spark, sf_dir)), [[0, 1, 2], [3, 4, 5]]
             ),
@@ -1146,9 +1038,7 @@ def _onl_arrival_split_sequential(spark: SparkSession, sf_dir: str) -> str:
         spark,
         sf_dir,
         "onls_src_",
-        lambda src: _write_wave_files_onepass(
-            spark, _onl_wave_dfs(embeddings64(spark, sf_dir)), src
-        ),
+        lambda src: write_arrivals(_onl_wave_dfs(embeddings64(spark, sf_dir)), src),
     )
 
 
@@ -1486,8 +1376,7 @@ def _onl_del_arrival_split(spark: SparkSession, sf_dir: str) -> str:
         spark,
         sf_dir,
         "onld_src_",
-        lambda src: _write_wave_files_onepass(
-            spark,
+        lambda src: write_arrivals(
             _merge_waves(
                 _onl_del_wave_dfs(embeddings64(spark, sf_dir)),
                 [[0, 1, 2], [3, 4, 5, 6]],

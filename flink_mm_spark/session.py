@@ -14,6 +14,8 @@ the same code runs unchanged on a multi-executor cluster:
 from __future__ import annotations
 
 import atexit
+import functools
+import glob
 import os
 import shutil
 import tempfile
@@ -21,6 +23,8 @@ import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 _TMP_ROOT: str | None = None
 
@@ -148,6 +152,143 @@ def staged(
     return path
 
 
+def write_arrivals(frames: list[DataFrame], src: str, start: int = 0) -> int:
+    """Stage ``frames`` as ordered arrival files under ``src``: frame i
+    becomes ``arrival{start + i}.parquet`` with mtime ``t0 + 10 (start +
+    i)`` (anchored an hour in the past), so a file source with
+    ``maxFilesPerTrigger=1`` delivers them one per micro-batch in list
+    order. ONE job: the frames are unioned under an ``arrival`` tag,
+    repartitioned by it (each frame collapses into one task, hence one
+    file) and written with ``partitionBy``; the files then move into
+    place. Row order inside a file is not preserved — every consumer
+    sorts or keys within a batch. Empty frames write no file and are
+    skipped (the rest keep their order); a frame that writes more than
+    one file raises ``ValueError``. Returns the number of files written;
+    a second life staged into the same ``src`` passes ``start`` past the
+    first life's frames."""
+    os.makedirs(src, exist_ok=True)
+    t0 = int(os.path.getmtime(src)) - 3600
+    tagged = [df.withColumn("arrival", F.lit(i)) for i, df in enumerate(frames)]
+    tmp = scratch_dir("arrivals_tmp_")
+    u = functools.reduce(DataFrame.unionByName, tagged).repartition("arrival")
+    u.write.partitionBy("arrival").mode("overwrite").parquet(tmp)
+    n = 0
+    for i in range(len(frames)):
+        parts = glob.glob(f"{tmp}/arrival={i}/part-*.parquet")
+        if not parts:
+            continue
+        if len(parts) > 1:
+            raise ValueError(f"arrival frame {i} wrote {len(parts)} files: {parts}")
+        k = start + i
+        dst = f"{src}/arrival{k}.parquet"
+        shutil.move(parts[0], dst)
+        os.utime(dst, (t0 + 10 * k, t0 + 10 * k))
+        n += 1
+    shutil.rmtree(tmp, ignore_errors=True)
+    return n
+
+
+def drain_with_timers(
+    q,
+    poll_s: float = 0.25,
+    min_elapsed_s: float = 0.0,
+    max_wall_s: float = 300.0,
+    expected_batches: int | None = None,
+) -> None:
+    """Drain an availableNow stream whose stateful operator arms
+    ProcessingTimeTimeout timers. With such timers pending, availableNow
+    NEVER self-terminates: after the data batches it keeps scheduling
+    empty timer-check batches ~2 s apart until every timer has fired
+    (measured r10 — 28 empty batches and counting on a 4-file source).
+    Drained-ness is detected from source OFFSETS, not row counts (review
+    r10): a batch whose source endOffset equals its startOffset consumed
+    no file — whereas a zero-ROW batch can also be an EMPTY arrival file,
+    and stopping there would silently truncate the stream. One no-file
+    batch is still not proof: a checkpoint RESTART first replays the last
+    planned timer batch (no-file) even when new files are pending. Two
+    CONSECUTIVE no-file batches are — if a file were available, the batch
+    after a no-file batch would consume it. ``min_elapsed_s`` keeps the
+    timer batches running past a TTL deadline before stopping (the
+    eviction test's life 1 passes its TTL here so the sweep commits
+    deterministically in-life). ``max_wall_s`` is the overall deadline
+    (ADVICE r10 #3): a query that stalls without ever producing two
+    consecutive no-file progress entries is stopped and raised on loudly
+    instead of hanging the bench/driver run forever.
+
+    ``expected_batches`` (r14, VERDICT r13 #1): when the caller KNOWS how
+    many file-consuming batches the run must commit (a FRESH checkpoint
+    over a staged arrival dir with ``maxFilesPerTrigger=1`` commits
+    exactly one per file), the stream is provably drained as soon as that
+    many consuming batches have committed — a progress entry is posted
+    only after its batch commits, so stopping there cannot truncate data,
+    and the pending TTL timers are safety machinery with nothing left to
+    evict inside the run. This skips the ~2 s × 2 empty timer-check
+    batches the conservative offset rule waits out (~4-5 s of
+    ``minhash_dedup_streamed_capped``'s wall was that wait). The offset
+    rule stays as fallback — and is the ONLY rule when
+    ``expected_batches`` is None, which every checkpoint-RESUMING caller
+    must keep using (a restart replays the last planned timer batch
+    first, so the consumed count under-runs there; the two-life
+    restart/eviction tests all use the default).
+
+    Both rules tally batches across polls by ``batchId`` (ADVICE r14):
+    ``recentProgress`` keeps only the last
+    ``spark.sql.streaming.numRecentProgressUpdates`` entries, so
+    recounting it would silently lose the fast path on long runs. Only a
+    poll that falls more batches behind than that buffer holds loses
+    entries; it is warned about, and the missed batches count as
+    non-consuming (the safe side — never an early stop)."""
+    import time
+    import warnings
+
+    def no_file(p) -> bool:
+        srcs = p.get("sources", [])
+        return bool(srcs) and all(s["startOffset"] == s["endOffset"] for s in srcs)
+
+    t0 = time.monotonic()
+    last_bid, consumed, idle = -1, 0, 0  # idle: trailing no-file batches
+    while q.isActive:
+        new = [p for p in q.recentProgress if p["batchId"] > last_bid]
+        if new and 0 <= last_bid < new[0]["batchId"] - 1:
+            warnings.warn(
+                f"drain_with_timers: progress for batches {last_bid + 1}.."
+                f"{new[0]['batchId'] - 1} rolled out of recentProgress unseen"
+            )
+        for p in new:
+            last_bid = p["batchId"]
+            if no_file(p):
+                idle += 1
+            else:
+                idle = 0
+                consumed += bool(p.get("sources"))
+        drained = idle >= 2 or (
+            expected_batches is not None and consumed >= expected_batches
+        )
+        if drained and time.monotonic() - t0 >= min_elapsed_s:
+            q.stop()
+            break
+        if time.monotonic() - t0 > max_wall_s:
+            q.stop()
+            q.awaitTermination()
+            raise TimeoutError(
+                f"drain_with_timers: no drained state after {max_wall_s:.0f}s "
+                f"({len(q.recentProgress)} progress entries)"
+            )
+        time.sleep(poll_s)
+    q.awaitTermination()
+
+
+def _drain(w: DataStreamWriter, ckpt: str, expected_batches: int | None = None) -> None:
+    """Start ``w`` from ``ckpt`` under ``availableNow`` and block until it
+    has drained: ``awaitTermination``, or ``drain_with_timers`` for a
+    fresh-checkpoint run whose timers block self-termination."""
+    q = w.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+    if expected_batches is None:
+        q.awaitTermination()
+    else:
+        drain_with_timers(q, expected_batches=expected_batches)
+
+
 def drain_to_memory(
     spark: SparkSession,
     df: DataFrame,
@@ -164,16 +305,43 @@ def drain_to_memory(
     name = f"{slot}_{uuid.uuid4().hex[:8]}"
     hold(spark, slot, name)
     with stream_state_parts(spark, parts):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt or scratch_dir(f"{slot}_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
+        _drain(
+            df.writeStream.format("memory").queryName(name).outputMode(mode),
+            ckpt or scratch_dir(f"{slot}_ckpt_"),
         )
-        q.awaitTermination()
     return spark.table(name)
+
+
+def drain_to_parquet(
+    df: DataFrame,
+    write: Callable[[DataFrame, str], None],
+    dst: str | None = None,
+    ckpt: str | None = None,
+    expected_batches: int | None = None,
+) -> str:
+    """Run the streaming ``df`` to completion (``availableNow``), handing
+    micro-batch ``b`` to ``write(batch, f"{dst}/ingest={b}")``, and return
+    ``dst`` (default: a fresh ``scratch_dir``). EXACTLY-ONCE layout:
+    ``write`` must OVERWRITE its path, so a batch replayed after a failure
+    between its write and the checkpoint commit replaces its own output
+    instead of duplicating it (a replayable source plus an idempotent
+    sink); the committed tree is a pure function of the logged offsets,
+    and crash debris is ``_``-prefixed, invisible to readers. Readers
+    drop the ``ingest`` partition column. ``expected_batches`` drains a
+    fresh checkpoint through ``drain_with_timers`` (stateful operators
+    with pending timers never self-terminate). Jobs run under the
+    caller's shuffle-partition setting."""
+    dst = dst or scratch_dir("drain_dst_")
+
+    def batch(bdf: DataFrame, bid: int) -> None:
+        write(bdf, f"{dst}/ingest={bid}")
+
+    _drain(
+        df.writeStream.foreachBatch(batch),
+        ckpt or scratch_dir("drain_ckpt_"),
+        expected_batches,
+    )
+    return dst
 
 
 def get_spark(

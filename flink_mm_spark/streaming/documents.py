@@ -49,7 +49,14 @@ from flink_mm_spark.operators.dedup import (
     mhx_signatures,
 )
 from flink_mm_spark.registry import register
-from flink_mm_spark.session import drain_to_memory, staged
+from flink_mm_spark.session import (
+    drain_to_memory,
+    drain_to_parquet,
+    scratch_dir,
+    staged,
+    stream_state_parts,
+    write_arrivals,
+)
 from flink_mm_spark.sources.tables import table
 
 # documents parquet carries no timestamps, so the declared stream schema
@@ -643,8 +650,6 @@ def minhash_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the store replaces it with O(bucket members) state probes. The
     downstream dropDuplicates is pair-list-sized, exactly like the batch
     pipeline's candidate dedup."""
-    from flink_mm_spark.session import scratch_dir
-
     src = _arrival_split(spark, sf_dir)
     bands = minhash_band_rows(
         spread_batches(documents_stream(spark, src, max_files_per_trigger=1), src)
@@ -725,7 +730,6 @@ def dedup_keep_best_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(members) bounds are unchanged; the report is ``kb_report``'s
     pair-linear joins."""
     from flink_mm_spark.operators.dedup import kb_quality_cols, kb_report
-    from flink_mm_spark.session import scratch_dir
     from flink_mm_spark.sources.tables import parallelize_scan
 
     src = _arrival_split(spark, sf_dir)
@@ -749,137 +753,27 @@ def dedup_keep_best_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kb_report(quality, decided.select("doc_a", "doc_b"), losers)
 
 
-def drain_with_timers(
-    q,
-    poll_s: float = 0.25,
-    min_elapsed_s: float = 0.0,
-    max_wall_s: float = 300.0,
-    expected_batches: int | None = None,
-) -> None:
-    """Drain an availableNow stream whose stateful operator arms
-    ProcessingTimeTimeout timers. With such timers pending, availableNow
-    NEVER self-terminates: after the data batches it keeps scheduling
-    empty timer-check batches ~2 s apart until every timer has fired
-    (measured r10 — 28 empty batches and counting on a 4-file source).
-    Drained-ness is detected from source OFFSETS, not row counts (review
-    r10): a batch whose source endOffset equals its startOffset consumed
-    no file — whereas a zero-ROW batch can also be an EMPTY arrival file,
-    and stopping there would silently truncate the stream. One no-file
-    batch is still not proof: a checkpoint RESTART first replays the last
-    planned timer batch (no-file) even when new files are pending. Two
-    CONSECUTIVE no-file batches are — if a file were available, the batch
-    after a no-file batch would consume it. ``min_elapsed_s`` keeps the
-    timer batches running past a TTL deadline before stopping (the
-    eviction test's life 1 passes its TTL here so the sweep commits
-    deterministically in-life). ``max_wall_s`` is the overall deadline
-    (ADVICE r10 #3): a query that stalls without ever producing two
-    consecutive no-file progress entries is stopped and raised on loudly
-    instead of hanging the bench/driver run forever.
-
-    ``expected_batches`` (r14, VERDICT r13 #1): when the caller KNOWS how
-    many file-consuming batches the run must commit (a FRESH checkpoint
-    over a staged arrival dir with ``maxFilesPerTrigger=1`` commits
-    exactly one per file), the stream is provably drained as soon as that
-    many consuming batches have committed — a progress entry is posted
-    only after its batch commits, so stopping there cannot truncate data,
-    and the pending TTL timers are safety machinery with nothing left to
-    evict inside the run. This skips the ~2 s × 2 empty timer-check
-    batches the conservative offset rule waits out (~4-5 s of
-    ``minhash_dedup_streamed_capped``'s wall was that wait). The offset
-    rule stays as fallback — and is the ONLY rule when
-    ``expected_batches`` is None, which every checkpoint-RESUMING caller
-    must keep using (a restart replays the last planned timer batch
-    first, so the consumed count under-runs there; the two-life
-    restart/eviction tests all use the default).
-
-    Both rules tally batches across polls by ``batchId`` (ADVICE r14):
-    ``recentProgress`` keeps only the last
-    ``spark.sql.streaming.numRecentProgressUpdates`` entries, so
-    recounting it would silently lose the fast path on long runs. Only a
-    poll that falls more batches behind than that buffer holds loses
-    entries; it is warned about, and the missed batches count as
-    non-consuming (the safe side — never an early stop)."""
-    import time
-    import warnings
-
-    def no_file(p) -> bool:
-        srcs = p.get("sources", [])
-        return bool(srcs) and all(s["startOffset"] == s["endOffset"] for s in srcs)
-
-    t0 = time.monotonic()
-    last_bid, consumed, idle = -1, 0, 0  # idle: trailing no-file batches
-    while q.isActive:
-        new = [p for p in q.recentProgress if p["batchId"] > last_bid]
-        if new and 0 <= last_bid < new[0]["batchId"] - 1:
-            warnings.warn(
-                f"drain_with_timers: progress for batches {last_bid + 1}.."
-                f"{new[0]['batchId'] - 1} rolled out of recentProgress unseen"
-            )
-        for p in new:
-            last_bid = p["batchId"]
-            if no_file(p):
-                idle += 1
-            else:
-                idle = 0
-                consumed += bool(p.get("sources"))
-        drained = idle >= 2 or (
-            expected_batches is not None and consumed >= expected_batches
-        )
-        if drained and time.monotonic() - t0 >= min_elapsed_s:
-            q.stop()
-            break
-        if time.monotonic() - t0 > max_wall_s:
-            q.stop()
-            q.awaitTermination()
-            raise TimeoutError(
-                f"drain_with_timers: no drained state after {max_wall_s:.0f}s "
-                f"({len(q.recentProgress)} progress entries)"
-            )
-        time.sleep(poll_s)
-    q.awaitTermination()
-
-
 def deterministic_arrival_split(
     spark: SparkSession, sf_dir: str, n_batches: int = 4
 ) -> str:
     """Arrival split whose batch assignment is a pure function of content:
-    document k lands in file ``batch{k % n_batches}.parquet`` and the
-    files carry strictly increasing mtimes, so the file-source's
-    oldest-first order makes the whole arrival order (doc_id % n, doc_id)
-    replayable without reading the split back. The EXACT tier doesn't
-    need this (its output is arrival-order independent); the capped tier
-    does — a prefix cap keeps whichever members arrived first, so its
-    equivalence tests replay exactly this order. Staged like
-    ``_arrival_split``, keyed by (sf_dir, n_batches) (ADVICE r11 #1): an
-    sf_dir-only key would silently reuse a split with the wrong batch
-    count if a caller's n_batches is ever retuned. Each bucket is written
-    by a normal distributed job (coalesce(1) merely makes it one file —
-    the corpus never collects to the driver); production arrivals come
-    pre-split by ingestion time and need no such staging."""
-    import glob
-    import os
-    import shutil
-
-    from flink_mm_spark.session import scratch_dir
+    the documents with ``doc_id % n_batches == k`` form the k-th arrival
+    file (``session.write_arrivals``; an empty residue class writes no
+    file), so the file-source's oldest-first order makes the whole
+    arrival order (doc_id % n, doc_id) replayable without reading the
+    split back. The EXACT tier doesn't need this (its output is
+    arrival-order independent); the capped tier does — a prefix cap keeps
+    whichever members arrived first, so its equivalence tests replay
+    exactly this order. Staged like ``_arrival_split``, keyed by (sf_dir,
+    n_batches) (ADVICE r11 #1): an sf_dir-only key would silently reuse a
+    split with the wrong batch count if a caller's n_batches is ever
+    retuned. Production arrivals come pre-split by ingestion time and need
+    no such staging."""
 
     def write(src: str) -> None:
         docs = table(spark, sf_dir, "documents")
-        # anchor file mtimes safely in the past so every batch file is
-        # strictly ordered AND already "old" when the stream first lists
-        t0 = int(os.path.getmtime(src)) - 3600
-        for k in range(n_batches):
-            tmp = scratch_dir("mds_det_tmp_")
-            docs.filter(F.pmod("doc_id", F.lit(n_batches)) == k).coalesce(
-                1
-            ).write.mode("overwrite").parquet(tmp)
-            parts = glob.glob(f"{tmp}/part-*.parquet")
-            if parts:  # an empty doc_id residue class (corpus < n_batches)
-                # writes no part file; skipping it keeps the arrival order
-                # content-determined — the class contributes zero docs
-                dst = f"{src}/batch{k}.parquet"
-                shutil.move(parts[0], dst)
-                os.utime(dst, (t0 + 10 * k, t0 + 10 * k))
-            shutil.rmtree(tmp, ignore_errors=True)  # ADVICE r10 #2
+        batch = F.pmod("doc_id", F.lit(n_batches))
+        write_arrivals([docs.filter(batch == k) for k in range(n_batches)], src)
 
     return staged(spark, (sf_dir, n_batches), "mds_det_", write)
 
@@ -909,50 +803,34 @@ def minhash_dedup_streamed_capped(spark: SparkSession, sf_dir: str) -> DataFrame
     replay. TTL is idle-eviction, proven by the two-life timeout test;
     at one hour it cannot fire inside this entry's availableNow drain.
 
-    Sink is foreachBatch-append-to-parquet, NOT the memory sink: on this
-    Spark version a ProcessingTimeTimeout stateful operator under the
-    memory sink dies at micro-batch planning with an INTERNAL_ERROR
-    NullPointerException (SparkPlan.session() null — reproduced r10; the
-    NoTimeout exact tier plans fine). The parquet spool also keeps the
-    emitted pair stream distributed rather than pinned in driver memory.
-    Replay note (r11): the spool append is at-least-once, but the RESULT
-    is replay-idempotent by construction — a replayed batch re-emits the
-    identical pair rows (pairs are pure functions of content + arrival
-    order) and the final ``dropDuplicates([doc_a, doc_b])`` absorbs them;
-    only sinks whose rows are NOT downstream-deduped need the
-    batchId-deterministic writer (``idempotent_shard_append``)."""
-    from flink_mm_spark.session import scratch_dir
+    Sink is the parquet drain (``session.drain_to_parquet``), NOT the
+    memory sink: on this Spark version a ProcessingTimeTimeout stateful
+    operator under the memory sink dies at micro-batch planning with an
+    INTERNAL_ERROR NullPointerException (SparkPlan.session() null —
+    reproduced r10; the NoTimeout exact tier plans fine). The parquet
+    spool also keeps the emitted pair stream distributed rather than
+    pinned in driver memory. The final ``dropDuplicates([doc_a, doc_b])``
+    is the cross-band pair dedup."""
+    import glob
 
     src = deterministic_arrival_split(spark, sf_dir)
     bands = minhash_band_rows(
         spread_batches(documents_stream(spark, src, max_files_per_trigger=1), src)
     )
-    spool = scratch_dir("mdsc_pairs_")
-    from flink_mm_spark.session import stream_state_parts
-
     ckpt = scratch_dir("mdsc_ckpt_")
     grps = pin_stream_groups(ckpt, band_store_groups(spark))
     with stream_state_parts(spark):
-        q = (
-            minhash_band_store(
-                bands, cap=STREAM_HOT_CAP, ttl_minutes=60, n_groups=grps
-            )
-            .writeStream.foreachBatch(
-                lambda df, bid: df.write.mode("append").parquet(spool)
-            )
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
         # ProcessingTimeTimeout blocks self-termination; this is a FRESH
         # checkpoint over the staged files, so the consumed-batch count
         # proves drained-ness without waiting out empty timer batches
         # (r14, VERDICT r13 #1 — ~4-5 s of this entry's wall was the wait)
-        import glob as _glob
-
-        drain_with_timers(
-            q, expected_batches=len(_glob.glob(f"{src}/*.parquet"))
+        spool = drain_to_parquet(
+            minhash_band_store(
+                bands, cap=STREAM_HOT_CAP, ttl_minutes=60, n_groups=grps
+            ),
+            lambda df, path: df.write.mode("overwrite").parquet(path),
+            ckpt=ckpt,
+            expected_batches=len(glob.glob(f"{src}/*.parquet")),
         )
     pair_schema = T.StructType(
         [
@@ -964,6 +842,7 @@ def minhash_dedup_streamed_capped(spark: SparkSession, sf_dir: str) -> DataFrame
     return (
         spark.read.schema(pair_schema)
         .parquet(spool)
+        .drop("ingest")
         .dropDuplicates(["doc_a", "doc_b"])
         .orderBy("doc_a", "doc_b")
     )
@@ -1199,8 +1078,6 @@ def _corpus_to_shards(spark: SparkSession, sf_dir: str, strict: bool) -> DataFra
         idempotent_shard_append,
         read_back_shards,
     )
-    from flink_mm_spark.session import scratch_dir
-
     src = deterministic_arrival_split(spark, sf_dir, n_batches=CTS_SHARDS)
     # PASS 1 — online decisions over the arriving corpus
     bands = keep_best_band_rows(
@@ -1225,10 +1102,8 @@ def _corpus_to_shards(spark: SparkSession, sf_dir: str, strict: bool) -> DataFra
     # frozen drop set, so pass 2 takes ALL staged files in ONE availableNow
     # micro-batch (r14: was maxFilesPerTrigger=1 — 4 batches × full
     # micro-batch planning/commit + 4 × 132 shard files; now 1 batch and
-    # 132 files, exactly-once contract unchanged since the single batch
-    # still owns its batchId-deterministic ``ingest=0`` subpath).
+    # 132 files).
     n_tok, _ = kb_quality_cols()
-    dst = scratch_dir("cts_dst_")
     # spread_batches: the n_tok regexp count otherwise runs single-task
     # on the few-file micro-batch (r13; pure per-document function, and
     # the writer re-keys on shard_id anyway so layout is unchanged)
@@ -1238,17 +1113,12 @@ def _corpus_to_shards(spark: SparkSession, sf_dir: str, strict: bool) -> DataFra
         .withColumn("shard_id", F.pmod("doc_id", F.lit(CTS_SHARDS)).cast("bigint"))
         .select("doc_id", "n_tok", "shard_id")
     )
-    q2 = (
-        doc_stream.writeStream.foreachBatch(
-            lambda df, bid: idempotent_shard_append(
-                df.join(F.broadcast(drops), "doc_id", "left_anti"), bid, dst
-            )
-        )
-        .option("checkpointLocation", scratch_dir("cts2_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+    dst = drain_to_parquet(
+        doc_stream,
+        lambda df, path: idempotent_shard_append(
+            df.join(F.broadcast(drops), "doc_id", "left_anti"), path
+        ),
     )
-    q2.awaitTermination()
     back = read_back_shards(spark, dst)
     h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10).cast(
         "bigint"
@@ -1304,10 +1174,8 @@ def corpus_to_shards_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     drains the (pair, loser, arrival) verdicts; arrival-losers reduce to a
     drop set (pair-bounded, checkpointed). Pass 2 streams the SAME arrival
     files as documents, anti-joins each micro-batch against the broadcast
-    drop set, and appends survivors via `idempotent_shard_append` — each
-    batch owns a batchId-deterministic subpath, so a replayed batch cannot
-    duplicate slices (the kill-mid-append restart guarantee carries over
-    verbatim). The shard key is doc_id % CTS_SHARDS — content-determined,
+    drop set, and appends survivors via `idempotent_shard_append` through
+    the exactly-once ``session.drain_to_parquet``. The shard key is doc_id % CTS_SHARDS — content-determined,
     equal to the arrival batch by construction. The verify side is one
     scan of the read-back plus one shard-keyed aggregate.
 

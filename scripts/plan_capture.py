@@ -1,9 +1,10 @@
 """Capture .explain("formatted") + AQE-final executed plans for named
-registry entries into plans/r14/<name>_<tag>.txt (the r14 optimization
+registry entries into plans/<round>/<name>_<tag>.txt (an optimization
 round's before/after evidence — guide §1/§7.2).
 
-Usage: python scripts/r14_plan_capture.py <tag> <name> [<name> ...]
-  tag is "before" or "after". Runs at sf0.001 (cheap, same plan shapes),
+Usage: python scripts/plan_capture.py <round> <tag> <name> [<name> ...]
+  round names the output dir under plans/ (e.g. "r14"); tag is "before"
+  or "after". Runs at sf0.001 (cheap, same plan shapes),
   executes each entry first so AQE's final plan is real (CLAUDE.md: AQE
   hides the final plan until execution).
 """
@@ -20,18 +21,18 @@ from flink_mm_spark import registry
 from flink_mm_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-OUT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r14")
+PLANS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans")
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    rnd, tag, *names = sys.argv[1:]
+    out_dir = os.path.join(PLANS_DIR, rnd)
     registry.load_all()
     unknown = [n for n in names if n not in registry.QUERIES]
     if unknown:
         raise KeyError(f"not registered: {unknown}")
-    os.makedirs(OUT_DIR, exist_ok=True)
-    spark = get_spark("r14-plan-capture")
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark(f"{rnd}-plan-capture")
     spark.sparkContext.setLogLevel("ERROR")
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     for name in names:
@@ -46,7 +47,7 @@ def main() -> None:
             "\n---- AQE-final executedPlan (after collect) ----\n" + final
         )
         text = re.sub(r"file:[^,\]\s]+", "file:<path>", text)
-        path = os.path.join(OUT_DIR, f"{name}_{tag}.txt")
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(text)
         print(f"wrote {path}")

@@ -785,7 +785,7 @@ def test_shard_append_batches_add_no_exchange(spark, tmp_path):
     sc = spark.sparkContext
     sc.setJobGroup("shard_append_pin", "per-batch append must not shuffle")
     try:
-        idempotent_shard_append(batch_df, 0, str(tmp_path / "out"))
+        idempotent_shard_append(batch_df, str(tmp_path / "out"))
     finally:
         sc.setJobGroup(None, None)
     tracker = sc.statusTracker()

@@ -1,6 +1,7 @@
 """The session-scoped resource registry (``session.hold`` / ``staged`` /
 ``drain_to_memory``): one mechanism for held frames, memory-sink views and
-staged arrival dirs, scoped to the live SparkContext."""
+staged arrival dirs, scoped to the live SparkContext; and the arrival
+stager ``session.write_arrivals``."""
 
 from __future__ import annotations
 
@@ -10,6 +11,8 @@ import re
 import subprocess
 import sys
 import textwrap
+
+import pytest
 
 from tests.conftest import SF_DIR
 
@@ -116,13 +119,14 @@ def test_hold_releases_previous_frames(spark):
 
 
 def test_one_resource_mechanism_in_engine():
-    """Guard: the engine keeps ONE mechanism for session resources — no
-    module-level ``_*_CACHE`` globals, and memory sinks only through
-    ``session.drain_to_memory`` (plus the binmatrix stream's timed-trigger
-    loop in ``sources/datasource.py``)."""
+    """Guard: the engine keeps ONE mechanism for session resources and
+    streams — no module-level ``_*_CACHE`` globals, streams only through
+    ``session`` (``drain_to_memory`` / ``drain_to_parquet``, plus the
+    binmatrix stream's timed-trigger loop in ``sources/datasource.py``),
+    and arrival mtimes only through ``session.write_arrivals``."""
     pkg = os.path.join(REPO, "flink_mm_spark")
     cache_global = re.compile(r"^_\w*CACHE\b\s*(:[^=\n]*)?=", re.M)
-    memory_sink = re.compile(r"\.writeStream\s*\.format\(\s*[\"']memory[\"']")
+    stream_sink = re.compile(r"\.writeStream\b")
     allowed_sinks = {"session.py", os.path.join("sources", "datasource.py")}
     bad = []
     for root, _dirs, files in os.walk(pkg):
@@ -133,6 +137,47 @@ def test_one_resource_mechanism_in_engine():
             rel = os.path.relpath(path, pkg)
             src = open(path).read()
             bad += [f"{rel}: {m.group(0)}" for m in cache_global.finditer(src)]
-            if rel not in allowed_sinks and memory_sink.search(src):
-                bad.append(f"{rel}: memory sink outside session.drain_to_memory")
+            if rel not in allowed_sinks and stream_sink.search(src):
+                bad.append(f"{rel}: writeStream outside session's drains")
+            if rel != "session.py" and "os.utime" in src:
+                bad.append(f"{rel}: os.utime outside session.write_arrivals")
     assert not bad, bad
+
+
+def test_write_arrivals_skips_empty_frames_in_order(spark, tmp_path):
+    """An empty frame writes no file and the rest keep their order:
+    [non-empty, empty, non-empty] stages 2 files with strictly
+    increasing mtimes, holding the first and third frames' rows."""
+    import glob
+
+    from flink_mm_spark.session import write_arrivals
+
+    frames = [
+        spark.range(3).selectExpr("id AS x"),
+        spark.range(0).selectExpr("id AS x"),
+        spark.range(10, 12).selectExpr("id AS x"),
+    ]
+    src = str(tmp_path / "arrivals")
+    assert write_arrivals(frames, src) == 2
+    files = sorted(glob.glob(f"{src}/*.parquet"), key=os.path.getmtime)
+    assert len(files) == 2
+    mtimes = [os.path.getmtime(f) for f in files]
+    assert mtimes[0] < mtimes[1]
+    rows = [sorted(r["x"] for r in spark.read.parquet(f).collect()) for f in files]
+    assert rows == [[0, 1, 2], [10, 11]]
+
+
+def test_write_arrivals_rejects_multi_file_frame(spark, tmp_path):
+    """A frame that writes more than one file would split one arrival
+    across micro-batches: the stager raises instead (``ValueError``, not
+    an ``assert`` that ``python -O`` strips)."""
+    from flink_mm_spark.session import write_arrivals
+
+    key = "spark.sql.files.maxRecordsPerFile"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        with pytest.raises(ValueError, match="arrival frame 0 wrote 3 files"):
+            write_arrivals([spark.range(3)], str(tmp_path / "arrivals"))
+    finally:
+        spark.conf.set(key, prev)

@@ -451,10 +451,10 @@ def test_ivf_pq_online_restart_recovers_index_state(spark, tmp_path):
         PQ_TOPK,
         _onl_wave_dfs,
         _pq_codebook,
-        _write_wave_files,
         embeddings64,
         onl_candidate_stream,
     )
+    from flink_mm_spark.session import write_arrivals
 
     registry.load_all()
     e = embeddings64(spark, SF_DIR)
@@ -475,10 +475,10 @@ def test_ivf_pq_online_restart_recovers_index_state(spark, tmp_path):
         )
         assert q.awaitTermination(300)
 
-    _write_wave_files(waves[:3], src)
+    write_arrivals(waves[:3], src)
     run_life()
     n1 = len(got)
-    _write_wave_files(waves[3:], src, start_k=3)
+    write_arrivals(waves[3:], src, start=3)
     run_life()
 
     cand = spark.createDataFrame(pd.DataFrame([r.asDict() for r in got]))
@@ -535,11 +535,11 @@ def test_ivf_pq_compaction_agrees_with_midstream_state(spark, tmp_path):
         _onl_wave_dfs,
         _pq_codebook,
         _pq_encode_block,
-        _write_wave_files,
         compact_index_from_state,
         embeddings64,
         onl_candidate_stream,
     )
+    from flink_mm_spark.session import write_arrivals
 
     e = embeddings64(spark, SF_DIR)
     cb = _pq_codebook(e)
@@ -568,12 +568,12 @@ def test_ivf_pq_compaction_agrees_with_midstream_state(spark, tmp_path):
     cds = _pq_encode_block(cb, pdf)
     full = {int(v): "_".join(map(str, row)) for v, row in zip(pdf["vec_id"], cds)}
 
-    _write_wave_files(waves[:3], src)
+    write_arrivals(waves[:3], src)
     run_life()
     half = compacted()
     assert half == {v: c for v, c in full.items() if v % 4 <= 1}
 
-    _write_wave_files(waves[3:], src, start_k=3)
+    write_arrivals(waves[3:], src, start=3)
     run_life()
     assert compacted() == full
 
@@ -672,8 +672,8 @@ def test_onl_capped_cap_binds_on_hot_cell(spark, tmp_path):
     from flink_mm_spark.operators.similarity import (
         compact_index_from_state,
         onl_candidate_stream,
-        _write_wave_files,
     )
+    from flink_mm_spark.session import write_arrivals
 
     cb = np.zeros((16, 64), dtype=np.float64)
     for c in range(16):
@@ -693,7 +693,7 @@ def test_onl_capped_cap_binds_on_hot_cell(spark, tmp_path):
     ]
     src = str(tmp_path / "hot_arrivals")
     ckpt = str(tmp_path / "hot_ckpt")
-    _write_wave_files(waves, src)
+    write_arrivals(waves, src)
     got: list = []
     q = (
         onl_candidate_stream(spark, src, cb, cell_cap=10)

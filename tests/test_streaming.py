@@ -814,9 +814,9 @@ def _replay_band_store(band_rows, batch_of, cap=None):
 def _run_band_store(
     spark, src, ckpt, cap=None, ttl_minutes=None, drain_min_s=0.0, decide=False
 ):
+    from flink_mm_spark.session import drain_with_timers
     from flink_mm_spark.streaming.documents import (
         documents_stream,
-        drain_with_timers,
         keep_best_band_rows,
         minhash_band_rows,
         minhash_band_store,
@@ -1045,20 +1045,25 @@ def test_shard_manifest_catches_duplicated_append(spark, tmp_path):
     assert all(dup[s] == clean[s] for s in clean if s != 0)
 
 
-def test_shard_append_restart_exactly_once(spark, tmp_path):
-    """Kill-mid-append restart recovery (VERDICT r10 #1): the idempotent
-    batchId-deterministic writer must make a REPLAYED micro-batch a no-op
-    duplication-wise. Life 1 streams the slice arrivals and dies by an
-    injected failure AFTER batch 1's append completes but BEFORE
-    Structured Streaming commits the batch — exactly the window where the
-    old mode("append") writer duplicated (the failure mode
+def _plain_batch_writer(df, path):
+    df.write.mode("overwrite").parquet(path)
+
+
+@pytest.mark.parametrize("writer", ["shard", "plain"])
+def test_shard_append_restart_exactly_once(spark, tmp_path, writer):
+    """Kill-mid-append restart recovery (VERDICT r10 #1) on the shared
+    parquet drain (``session.drain_to_parquet``): a REPLAYED micro-batch
+    must be a no-op duplication-wise. Life 1 streams the slice arrivals
+    and dies by an injected failure AFTER batch 1's write completes but
+    BEFORE Structured Streaming commits the batch — exactly the window
+    where the old mode("append") writer duplicated (the failure mode
     test_shard_manifest_catches_duplicated_append proves the manifest
     detects). Life 2 restarts from the same checkpoint; batch 1 REPLAYS
-    (asserted — the writer sees batchId 1 again) and its overwrite
+    (asserted — the writer sees batch 1's path again) and its overwrite
     replaces life 1's output. The final recomputed manifest must equal the
     one-shot batch write's manifest on every shard: zero duplicate
-    slices, zero lost slices, fingerprints intact."""
-    from pyspark.sql import functions as F
+    slices, zero lost slices, fingerprints intact. Run with the shard
+    writer and with a plain per-batch writer (the pq sites' shape)."""
     from pyspark.sql import utils as U
 
     from flink_mm_spark.operators.llm_prep import (
@@ -1068,8 +1073,10 @@ def test_shard_append_restart_exactly_once(spark, tmp_path):
         idempotent_shard_append,
         read_back_shards,
     )
+    from flink_mm_spark.session import drain_to_parquet
     from tests.conftest import SF_DIR
 
+    write = {"shard": idempotent_shard_append, "plain": _plain_batch_writer}[writer]
     src = str(tmp_path / "src")
     dst = str(tmp_path / "dst")
     ckpt = str(tmp_path / "ckpt")
@@ -1077,6 +1084,7 @@ def test_shard_append_restart_exactly_once(spark, tmp_path):
     packed.repartition(4).write.parquet(src)
     want = {r["shard_id"]: tuple(r) for r in _shard_rollup(packed).collect()}
     schema = spark.read.parquet(src).schema
+    batch1 = f"{dst}/ingest=1"
 
     def stream():
         return (
@@ -1086,37 +1094,23 @@ def test_shard_append_restart_exactly_once(spark, tmp_path):
             .parquet(src)
         )
 
-    def crash_after_batch1(df, bid):
-        idempotent_shard_append(df, bid, dst)
-        if bid == 1:
+    def crash_after_batch1(df, path):
+        write(df, path)
+        if path == batch1:
             raise RuntimeError("injected: die after append, before commit")
 
-    q1 = (
-        stream()
-        .writeStream.foreachBatch(crash_after_batch1)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
     with pytest.raises(U.StreamingQueryException, match="injected"):
-        q1.awaitTermination()
+        drain_to_parquet(stream(), crash_after_batch1, dst=dst, ckpt=ckpt)
     # life 2: same checkpoint. Batch 1's offsets are logged but its commit
     # is not, so it must REPLAY with the same batchId before 2 and 3 run.
-    life2_bids: list[int] = []
+    life2: list[str] = []
 
-    def writer(df, bid):
-        life2_bids.append(bid)
-        idempotent_shard_append(df, bid, dst)
+    def recording(df, path):
+        life2.append(path)
+        write(df, path)
 
-    q2 = (
-        stream()
-        .writeStream.foreachBatch(writer)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    assert 1 in life2_bids, f"batch 1 was not replayed: {life2_bids}"
+    assert drain_to_parquet(stream(), recording, dst=dst, ckpt=ckpt) == dst
+    assert batch1 in life2, f"batch 1 was not replayed: {life2}"
     got = {
         r["shard_id"]: tuple(r)
         for r in _shard_rollup(read_back_shards(spark, dst)).collect()
@@ -1523,10 +1517,10 @@ def test_drain_with_timers_expected_batches_skips_empty_wait(spark, tmp_path):
     file-consuming batch commits instead of waiting out two ~2 s empty
     timer-check batches — the progress log must show at most ONE no-file
     entry, and the emitted pairs must equal the conservative drain's."""
+    from flink_mm_spark.session import drain_with_timers
     from flink_mm_spark.streaming.documents import (
         STREAM_HOT_CAP,
         documents_stream,
-        drain_with_timers,
         minhash_band_rows,
         minhash_band_store,
     )
@@ -1576,10 +1570,10 @@ def test_drain_with_timers_counts_batches_past_progress_buffer(spark, tmp_path):
     entry, the drain still stops once every file-consuming batch has
     committed — at most one empty timer batch, never the two the offset
     rule waits out."""
+    from flink_mm_spark.session import drain_with_timers
     from flink_mm_spark.streaming.documents import (
         STREAM_HOT_CAP,
         documents_stream,
-        drain_with_timers,
         minhash_band_rows,
         minhash_band_store,
     )
